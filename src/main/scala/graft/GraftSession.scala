@@ -22,10 +22,8 @@ object GraftSession {
       // tmpfs shuffle dirs: on a single box the shared disk is an
       // artificial bottleneck that a real N-node cluster doesn't have
       // (each node brings its own local SSDs); /dev/shm models that.
-      .config("spark.local.dir", {
-        val d = "/dev/shm/graft-spark"
-        new java.io.File(d).mkdirs(); d
-      })
+      // Spark creates a missing dir when its block manager starts.
+      .config("spark.local.dir", "/dev/shm/graft-spark")
 
   def local(cores: Int): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()

@@ -10,6 +10,7 @@ import graft.io.Tables
 import graft.ops.{Dedup, Similarity, TextStats}
 import graft.rules._
 import graft.rules.VRule._
+import graft.streaming.Replay
 
 /** Driver contract: one entry per operator (SURVEY.md §2), each with an
   * ANSI-SQL oracle the driver replays in DuckDB over the same parquet
@@ -43,42 +44,11 @@ object SparkEntry {
 
   private val T = Tables.turnsCte
 
-  /** Stage `df` as ONE parquet file named `name` in `destDir` with an
-    * explicit modification time — the file-source replay harness's unit of
-    * arrival order (FileStreamSource processes oldest-mtime first, so
-    * strictly increasing mtimes make batch order deterministic). The data
-    * never touches the driver: each chunk is a distributed write whose
-    * single part-file is then renamed into the watched directory.
+  /** A fresh scratch dir under java.io.tmpdir, deleted at JVM exit: the
+    * home of the files a query writes and then returns a lazy read of.
     */
-  private def stageOrderedFile(
-      df: DataFrame, scratch: String, destDir: String, name: String,
-      mtimeMs: Long): Unit = {
-    import scala.jdk.CollectionConverters._
-    df.coalesce(1).write.mode("overwrite").parquet(scratch)
-    val part = scala.util.Using.resource(
-      java.nio.file.Files.list(java.nio.file.Paths.get(scratch)))(
-      _.iterator.asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .next())
-    val dest = java.nio.file.Paths.get(destDir, name)
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.move(part, dest)
-    java.nio.file.Files.setLastModifiedTime(
-      dest, java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-  }
-
-  /** A fresh memory-sink table name, dropping this prefix's previous
-    * incarnations first: memory-sink tables pin their full result in the
-    * driver for the session lifetime, and Bench/Verify cycles re-run
-    * every query — without the cleanup each pass would leak one result
-    * copy per streaming query.
-    */
-  private def freshStreamView(s: SparkSession, prefix: String): String = {
-    s.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(prefix))
-      .foreach(s.catalog.dropTempView(_))
-    s"$prefix${System.nanoTime()}"
-  }
+  private def scratch(prefix: String): String =
+    org.apache.spark.sql.GraftBridge.tempDir(prefix).toString
 
   // ------------------------------------------------------------- queries
 
@@ -123,8 +93,7 @@ object SparkEntry {
     // the serde shape are all under the hard signal.
     "q_ingest_split" -> ((s, dir) => {
       import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_ingest").toString
+      val tmp = scratch("graft_verify_ingest")
       val jsonDir = s"$tmp/in"
       val outDir = s"$tmp/out"
       turns(s, dir).select(
@@ -196,8 +165,7 @@ object SparkEntry {
     // read-back must equal the plain sessionization SQL — resume and
     // layout must be results-invisible.
     "q_checkpoint_resume" -> ((s, dir) => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_verify_ckpt").toString
+      val out = scratch("graft_verify_ckpt")
       val sess =
         Sessionize(turns(s, dir), Seq("conv_id"), "ts", 1800L, Seq("turn_idx"))
           .select("conv_id", "turn_idx", "session_seq", "session_id")
@@ -501,8 +469,7 @@ object SparkEntry {
     // proves the SINK (partition pruning layout, partition-value type
     // roundtrip, one-task-per-shard routing) end-to-end.
     "q_write_shards" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_shards").toString
+      val tmp = scratch("graft_verify_shards")
       graft.ops.Curation.writeShards(
         docs(s, dir), strataCol = "lang", orderCol = "doc_id",
         tokens = TextStats.regexTokenCount(col("text")),
@@ -518,8 +485,7 @@ object SparkEntry {
     // json_quote expression), one file per (lang, shard) dir, read back
     // and byte-matched against the oracle's to_json replay.
     "q_write_jsonl" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_jsonl").toString
+      val tmp = scratch("graft_verify_jsonl")
       graft.io.JsonlSink.writeJsonlShards(
         docs(s, dir), idCol = "doc_id", textCol = "text",
         strataCol = "lang", budgetTokens = 2000L, outDir = tmp)
@@ -675,8 +641,7 @@ object SparkEntry {
     // must not change one row; the file-count shrink and one-file-per-
     // group invariants are asserted in LayoutSpec.
     "q_compact_exec" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_compact").toString
+      val tmp = scratch("graft_verify_compact")
       // the small-file fixture is a pure deterministic function of the
       // input dir, so stage it once PER JVM per dir and reuse (the bench
       // row then times the operator — manifest -> pack -> rewrite — not
@@ -686,8 +651,7 @@ object SparkEntry {
       // reuse stale data after the inputs or the fixture recipe change,
       // and two concurrent JVMs would race overwrites inside it.
       val small = compactFixtureCache.computeIfAbsent(dir, d => {
-        val stage = java.nio.file.Files
-          .createTempDirectory("graft_compact_fixture").toString + "/small"
+        val stage = scratch("graft_compact_fixture") + "/small"
         // ~8 docs per (lang, file) leaf: enough files that packing has
         // real work at every SF
         docs(s, d).withColumn("file_seq", floor(col("doc_id") / 64))
@@ -1209,8 +1173,7 @@ object SparkEntry {
     // the oracle is the plain-layout pipeline semantics, proving the
     // physical layout is results-invisible.
     "q_bucketed_pipeline" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_bucketed").toString
+      val tmp = scratch("graft_verify_bucketed")
       graft.io.Bucketed.writeTranscript(
         turns(s, dir), "verify_turns_bucketed", tmp, 16)
       Pipeline
@@ -1382,41 +1345,35 @@ object SparkEntry {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnEvent
-      implicit val sqlCtx = s.sqlContext
       val rows = turns(s, dir)
         .select($"conv_id", $"turn_idx", $"role", $"ts")
         .as[TurnEvent].collect()
         .sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
       val maxTs = rows.iterator.map(_.ts.getTime).max
-      val input = MemoryStream[TurnEvent]
-      val name = freshStreamView(s, "stream_sessions_")
-      // The stateful operator's parallelism (= state-store count) is
-      // frozen from shuffle.partitions at query start; per-batch state
-      // checkpointing costs O(batches × partitions) file ops, so pin a
-      // partition count sized for the key cardinality of this replay
-      // rather than the session-wide default.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try StreamingFeatures.sessionize(input.toDS(), gapSeconds = 1800L)
+      Replay(s) { r =>
+        implicit val sqlCtx = r.session.sqlContext
+        val input = MemoryStream[TurnEvent]
+        val q = StreamingFeatures.sessionize(input.toDS(), gapSeconds = 1800L)
           .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try {
-        val chunk = math.max(1, (rows.length + 2) / 3)
-        rows.grouped(chunk).foreach { g =>
-          input.addData(g.toSeq); q.processAllAvailable()
-        }
-        // gap + watermark + margin, twice (watermark lags one batch)
-        val step = (1800L + 600L + 10L) * 1000L
-        input.addData(TurnEvent("__wm__", 0, "user",
-          new java.sql.Timestamp(maxTs + step)))
-        q.processAllAvailable()
-        input.addData(TurnEvent("__wm__", 1, "user",
-          new java.sql.Timestamp(maxTs + 2 * step)))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(name).filter($"conv_id" =!= "__wm__")
+          .queryName("sessions")
+          .option("checkpointLocation", r.path("ckpt"))
+          .start()
+        try {
+          val chunk = math.max(1, (rows.length + 2) / 3)
+          rows.grouped(chunk).foreach { g =>
+            input.addData(g.toSeq); q.processAllAvailable()
+          }
+          // gap + watermark + margin, twice (watermark lags one batch)
+          val step = (1800L + 600L + 10L) * 1000L
+          input.addData(TurnEvent("__wm__", 0, "user",
+            new java.sql.Timestamp(maxTs + step)))
+          q.processAllAvailable()
+          input.addData(TurnEvent("__wm__", 1, "user",
+            new java.sql.Timestamp(maxTs + 2 * step)))
+          q.processAllAvailable()
+        } finally q.stop()
+        r.session.table("sessions")
+      }.filter($"conv_id" =!= "__wm__")
         .select("conv_id", "session_seq", "n_turns", "session_start",
           "session_end")
     }),
@@ -1434,56 +1391,24 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamfiles").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role", $"ts")
-      // chunk by GLOBAL event-time order so each conversation's turns stay
-      // ts-ordered across batches (the operator's cross-batch contract);
-      // the single-partition sort is replay-harness-only, like any replay
-      // coordinator — production streams arrive already time-ordered
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      val base = 1700000000000L
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet", base + i * 10000L)
-      }
-      // sentinel events: gap + watermark + margin beyond max ts, twice
-      // (the watermark updates BETWEEN batches, so the second sentinel's
-      // batch is the one that sees tails expired)
-      val maxTs = t.agg(max($"ts")).as[java.sql.Timestamp].head().getTime
-      val step = (1800L + 600L + 10L) * 1000L
-      (1 to 2).foreach { i =>
-        stageOrderedFile(
-          Seq(TurnEvent("__wm__", i - 1, "user",
-            new java.sql.Timestamp(maxTs + i * step))).toDS().toDF(),
-          s"$tmp/scratch_wm$i", watched, s"wm-$i.parquet",
-          base + (nChunks + i) * 10000L)
-      }
-      val name = freshStreamView(s, "stream_sessions_files_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnEvent]
-          StreamingFeatures.sessionize(src, gapSeconds = 1800L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).filter($"conv_id" =!= "__wm__")
+      Replay(s) { r =>
+        // chunk by GLOBAL event-time order so each conversation's turns
+        // stay ts-ordered across batches (the operator's cross-batch
+        // contract)
+        val src = r.stage(Replay.byRows(t, 4, $"ts", $"conv_id", $"turn_idx"))
+        // sentinel events: gap + watermark + margin beyond max ts, twice
+        // (the watermark updates BETWEEN batches, so the second sentinel's
+        // batch is the one that sees tails expired)
+        val maxTs = t.agg(max($"ts")).as[java.sql.Timestamp].head().getTime
+        val step = (1800L + 600L + 10L) * 1000L
+        (1 to 2).foreach { i =>
+          r.stageFile(Seq(TurnEvent("__wm__", i - 1, "user",
+            new java.sql.Timestamp(maxTs + i * step))).toDS().toDF())
+        }
+        r.toMemory(
+          StreamingFeatures.sessionize(src.as[TurnEvent], gapSeconds = 1800L))
+      }.filter($"conv_id" =!= "__wm__")
         .select("conv_id", "session_seq", "n_turns", "session_start",
           "session_end")
     }),
@@ -1499,40 +1424,11 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnToolEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamlocf").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"tool", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_locf_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnToolEvent]
-          StreamingFeatures.locf(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select("conv_id", "turn_idx", "tool_locf")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(t, 4, $"ts", $"conv_id", $"turn_idx"))
+        r.toMemory(StreamingFeatures.locf(src.as[TurnToolEvent]))
+      }.select("conv_id", "turn_idx", "tool_locf")
     }),
 
     // --- STREAMING LOCF with EXPIRY (live twin of q_locf_ttl) -------------------
@@ -1544,40 +1440,12 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnToolEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamlocfttl").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"tool", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_locf_ttl_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnToolEvent]
-          StreamingFeatures.locfTtl(src, ttlSeconds = 900L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select("conv_id", "turn_idx", "tool_ttl")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(t, 4, $"ts", $"conv_id", $"turn_idx"))
+        r.toMemory(
+          StreamingFeatures.locfTtl(src.as[TurnToolEvent], ttlSeconds = 900L))
+      }.select("conv_id", "turn_idx", "tool_ttl")
     }),
 
     // --- STREAMING capped session assignment (live twin of q_sessionize_capped) ---
@@ -1588,42 +1456,13 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamsesscap").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_sess_capped_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnEvent]
-          StreamingFeatures.sessionizeCapped(src,
-              gapSeconds = 1800L, maxSeconds = 1200L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select("conv_id", "turn_idx", "session_seq",
-        "slice_seq", "capped_session_id")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(t, 4, $"ts", $"conv_id", $"turn_idx"))
+        r.toMemory(StreamingFeatures.sessionizeCapped(src.as[TurnEvent],
+          gapSeconds = 1800L, maxSeconds = 1200L))
+      }.select("conv_id", "turn_idx", "session_seq", "slice_seq",
+        "capped_session_id")
     }),
 
     // --- STREAMING backward as-of join (the north rule's operator, live) ----------
@@ -1639,9 +1478,6 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.AsOfEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamasof").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).filter($"ts".isNotNull)
       val anchors = t.filter($"role" === "assistant")
         .select($"conv_id", lit(1).as("src"), $"turn_idx",
@@ -1651,40 +1487,10 @@ object SparkEntry {
         .agg(max_by($"tool", $"turn_idx").as("value"))
         .select($"conv_id", lit(0).as("src"), lit(0).as("turn_idx"),
           $"value", $"ts")
-      val tagged = anchors.unionByName(feed)
-      val nChunks = 4
-      val epochs = tagged.select($"ts").distinct()
-        .withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"))))
-      val ordered = tagged.join(epochs, Seq("ts"))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        .select($"conv_id", $"src", $"turn_idx", $"value", $"ts", $"__chunk")
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_asof_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(ordered.drop("__chunk").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[AsOfEvent]
-          StreamingFeatures.asOfBackward(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select("conv_id", "turn_idx", "tool_asof")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byEpochs(anchors.unionByName(feed), 4, "ts"))
+        r.toMemory(StreamingFeatures.asOfBackward(src.as[AsOfEvent]))
+      }.select("conv_id", "turn_idx", "tool_asof")
     }),
 
     // --- STREAMING FORWARD as-of (label join live) --------------------------------
@@ -1698,9 +1504,6 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.AsOfEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamasoffwd").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).filter($"ts".isNotNull)
       val anchors = t.filter($"role" === "assistant")
         .select($"conv_id", lit(1).as("src"), $"turn_idx",
@@ -1710,49 +1513,16 @@ object SparkEntry {
         .agg(max_by($"tool", $"turn_idx").as("value"))
         .select($"conv_id", lit(0).as("src"), lit(0).as("turn_idx"),
           $"value", $"ts")
-      val tagged = anchors.unionByName(feed)
-      val nChunks = 4
-      val epochs = tagged.select($"ts").distinct()
-        .withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"))))
-      val ordered = tagged.join(epochs, Seq("ts"))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        .select($"conv_id", $"src", $"turn_idx", $"value", $"ts", $"__chunk")
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      // the sentinel file lands LAST: one far-future null observation per
-      // conversation that has anchors
-      val sentinel = anchors.select($"conv_id").distinct()
-        .select($"conv_id", lit(0).as("src"), lit(0).as("turn_idx"),
-          lit(null).cast("string").as("value"),
-          lit("2100-01-01 00:00:00").cast("timestamp").as("ts"))
-      stageOrderedFile(sentinel, s"$tmp/scratch_sent", watched,
-        "chunk-sentinel.parquet", 1700000000000L + (nChunks + 1) * 10000L)
-      val name = freshStreamView(s, "stream_asof_fwd_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(ordered.drop("__chunk").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[AsOfEvent]
-          StreamingFeatures.asOfForward(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select($"conv_id", $"turn_idx",
-        $"tool_asof".as("next_tool"))
+      Replay(s) { r =>
+        val src = r.stage(Replay.byEpochs(anchors.unionByName(feed), 4, "ts"))
+        // the sentinel file lands LAST: one far-future null observation per
+        // conversation that has anchors
+        r.stageFile(anchors.select($"conv_id").distinct()
+          .select($"conv_id", lit(0).as("src"), lit(0).as("turn_idx"),
+            lit(null).cast("string").as("value"),
+            lit("2100-01-01 00:00:00").cast("timestamp").as("ts")))
+        r.toMemory(StreamingFeatures.asOfForward(src.as[AsOfEvent]))
+      }.select($"conv_id", $"turn_idx", $"tool_asof".as("next_tool"))
     }),
 
     // --- STREAMING target encoding (live strictly-past label stats) -------------
@@ -1764,44 +1534,12 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnLabelEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamenc").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role",
         octet_length($"text").cast("long").as("label"), $"ts")
-      val nChunks = 4
-      val epochs = t.select($"ts").distinct()
-        .withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"))))
-      val ordered = t.join(epochs, Seq("ts"))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        .select($"conv_id", $"turn_idx", $"role", $"label", $"ts", $"__chunk")
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_encode_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(ordered.drop("__chunk").schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[TurnLabelEvent]
-          StreamingFeatures.targetEncode(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select("conv_id", "turn_idx", "role", "enc_cnt", "enc_sum")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byEpochs(t, 4, "ts"))
+        r.toMemory(StreamingFeatures.targetEncode(src.as[TurnLabelEvent]))
+      }.select("conv_id", "turn_idx", "role", "enc_cnt", "enc_sum")
     }),
 
     // --- STREAMING ingest-volume anomaly gate ------------------------------------
@@ -1816,50 +1554,18 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.HourEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamanom").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).filter($"ts".isNotNull).select($"role", $"ts")
       val maxTs = t.agg(max($"ts")).head().getTimestamp(0).getTime
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("role"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      // transcript roles are a fixed enum; one sentinel per role flushes
-      // every key's tail bucket
-      val sentinel = Seq("user", "assistant", "system", "tool")
-        .map(r => (r, new java.sql.Timestamp(maxTs + 86400000L)))
-        .toDF("role", "ts")
-      stageOrderedFile(sentinel, s"$tmp/sent", watched, "sentinel.parquet",
-        1700000000000L + (nChunks + 1) * 10000L)
-      val name = freshStreamView(s, "stream_anom_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[HourEvent]
-          StreamingFeatures.volumeAnomalyLive(src,
-              bucketSeconds = 3600L, trailing = 24, factor = 2L)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name)
-        .select("role", "bucket", "n", "trail_n", "trail_sum", "is_spike")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(t, 4, $"ts", $"role"))
+        // transcript roles are a fixed enum; one sentinel per role flushes
+        // every key's tail bucket
+        r.stageFile(Seq("user", "assistant", "system", "tool")
+          .map(role => (role, new java.sql.Timestamp(maxTs + 86400000L)))
+          .toDF("role", "ts"))
+        r.toMemory(StreamingFeatures.volumeAnomalyLive(src.as[HourEvent],
+          bucketSeconds = 3600L, trailing = 24, factor = 2L))
+      }.select("role", "bucket", "n", "trail_n", "trail_sum", "is_spike")
     }),
 
     // --- STREAMING watermarked windowed counts (built-in stateful agg) ---------
@@ -1873,50 +1579,20 @@ object SparkEntry {
     "q_stream_window" -> ((s, dir) => {
       import s.implicits._
       import graft.streaming.StreamingFeatures
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamwin").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir).select($"conv_id", $"role", $"ts")
       val maxTs = t.agg(max($"ts")).head().getTimestamp(0).getTime
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      // watermark 600 s + window 300 s + margin, twice (watermark lags
-      // one batch)
-      val step = (600L + 300L + 10L) * 1000L
-      (1 to 2).foreach { i =>
-        val sentinel = Seq(("__wm__", "__wm__",
-          new java.sql.Timestamp(maxTs + i * step)))
-          .toDF("conv_id", "role", "ts")
-        stageOrderedFile(sentinel, s"$tmp/sent$i", watched,
-          s"sentinel-$i.parquet", 1700000000000L + (nChunks + i) * 10000L)
-      }
-      val name = freshStreamView(s, "stream_win_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(t.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          StreamingFeatures.windowedRoleCounts(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).filter($"role" =!= "__wm__")
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(t, 4, $"ts", $"conv_id"))
+        // watermark 600 s + window 300 s + margin, twice (watermark lags
+        // one batch)
+        val step = (600L + 300L + 10L) * 1000L
+        (1 to 2).foreach { i =>
+          r.stageFile(Seq(("__wm__", "__wm__",
+            new java.sql.Timestamp(maxTs + i * step)))
+            .toDF("conv_id", "role", "ts"))
+        }
+        r.toMemory(StreamingFeatures.windowedRoleCounts(src))
+      }.filter($"role" =!= "__wm__")
         .select(col("window.start").cast("long").as("w_start_sec"),
           col("role"), col("n"))
     }),
@@ -1933,45 +1609,16 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.DocEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamdedup").toString
-      val watched = s"$tmp/watched"
       val d = docs(s, dir).select($"doc_id", $"text")
       val union = d.unionAll(
         d.filter(col("doc_id") % 3 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
       val hashed = union.select(
         col("doc_id"), md5(col("text").cast("binary")).as("hash"))
-      val nChunks = 4
-      val ordered = hashed.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("hash"), col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_dedup_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(hashed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-            .as[DocEvent]
-          StreamingFeatures.dedupExact(src)
-            .writeStream.outputMode("append").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select(
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(hashed, 4, col("hash"), col("doc_id")))
+        r.toMemory(StreamingFeatures.dedupExact(src.as[DocEvent]))
+      }.select(
         col("doc_id"), col("hash"), col("kept").cast("long").as("kept"))
     }),
 
@@ -1982,39 +1629,12 @@ object SparkEntry {
     // bespoke operator. File-source replay across 4 micro-batches must
     // land register-for-register on the batch oracle.
     "q_stream_hll" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamhll").toString
-      val watched = s"$tmp/watched"
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val nChunks = 4
-      val ordered = d.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_hll_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(d.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          graft.ops.Sketches.hllRegisters(src, col("text"), p = 8)
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select(col("bucket"), col("max_rho"))
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(d, 4, col("doc_id")))
+        r.toMemory(graft.ops.Sketches.hllRegisters(src, col("text"), p = 8),
+          outputMode = "complete")
+      }.select(col("bucket"), col("max_rho"))
     }),
 
     // --- multimodal container decode (REAL pure-JVM PNG/WAV header parse) ------
@@ -2163,46 +1783,18 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnToolEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamresume").toString
-      val watched = s"$tmp/watched"
-      val sink = s"$tmp/sink"
-      val ckpt = s"$tmp/ckpt"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"tool", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      def stage(i: Int): Unit =
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      def runOnce(): Unit = {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try {
-            val src = s.readStream
-              .schema(t.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(watched)
-              .as[TurnToolEvent]
-            StreamingFeatures.locf(src)
-              .writeStream.outputMode("append").format("parquet")
-              .option("path", sink)
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try q.awaitTermination() finally q.stop()
+      Replay(s) { r =>
+        val chunks = Replay.byRows(t, 4, $"ts", $"conv_id", $"turn_idx")
+        def runOnce(): DataFrame = r.toParquet(
+          StreamingFeatures.locf(r.source(chunks.schema).as[TurnToolEvent]))
+        (1 to 2).foreach(i => r.stageFile(chunks.chunk(i)))
+        runOnce() // first run drains the staged half, then stops (the kill)
+        (3 to 4).foreach(i => r.stageFile(chunks.chunk(i)))
+        runOnce() // restart: recovered state + only the new files
+          .select("conv_id", "turn_idx", "tool_locf")
+          .localCheckpoint() // eager: the sink dir goes with the scratch
       }
-      (1 to 2).foreach(stage)
-      runOnce() // first run drains the staged half, then stops (the kill)
-      (3 to 4).foreach(stage)
-      runOnce() // restart: recovered state + only the new files
-      s.read.parquet(sink).select("conv_id", "turn_idx", "tool_locf")
     }),
 
     // --- STREAMING sessionize kill -> RESTART from checkpoint -------------------
@@ -2219,57 +1811,26 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.StreamingFeatures
       import graft.streaming.StreamingFeatures.TurnEvent
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_sessresume").toString
-      val watched = s"$tmp/watched"
-      val sink = s"$tmp/sink"
-      val ckpt = s"$tmp/ckpt"
       val t = turns(s, dir).select($"conv_id", $"turn_idx", $"role", $"ts")
-      val nChunks = 4
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      val base = 1700000000000L
-      def stage(i: Int): Unit =
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet", base + i * 10000L)
-      def runOnce(): Unit = {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try {
-            val src = s.readStream
-              .schema(t.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(watched)
-              .as[TurnEvent]
-            StreamingFeatures.sessionize(src, gapSeconds = 1800L)
-              .writeStream.outputMode("append").format("parquet")
-              .option("path", sink)
-              .option("checkpointLocation", ckpt)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-          } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        try q.awaitTermination() finally q.stop()
+      Replay(s) { r =>
+        val chunks = Replay.byRows(t, 4, $"ts", $"conv_id", $"turn_idx")
+        def runOnce(): DataFrame = r.toParquet(StreamingFeatures.sessionize(
+          r.source(chunks.schema).as[TurnEvent], gapSeconds = 1800L))
+        (1 to 2).foreach(i => r.stageFile(chunks.chunk(i)))
+        runOnce() // the kill: open sessions are live in the state store here
+        (3 to 4).foreach(i => r.stageFile(chunks.chunk(i)))
+        val maxTs = t.agg(max($"ts")).as[java.sql.Timestamp].head().getTime
+        val step = (1800L + 600L + 10L) * 1000L
+        (1 to 2).foreach { i =>
+          r.stageFile(Seq(TurnEvent("__wm__", i - 1, "user",
+            new java.sql.Timestamp(maxTs + i * step))).toDS().toDF())
+        }
+        runOnce() // restart: recovered open sessions + remaining files
+          .filter($"conv_id" =!= "__wm__")
+          .select("conv_id", "session_seq", "n_turns", "session_start",
+            "session_end")
+          .localCheckpoint() // eager: the sink dir goes with the scratch
       }
-      (1 to 2).foreach(stage)
-      runOnce() // the kill: open sessions are live in the state store here
-      (3 to 4).foreach(stage)
-      val maxTs = t.agg(max($"ts")).as[java.sql.Timestamp].head().getTime
-      val step = (1800L + 600L + 10L) * 1000L
-      (1 to 2).foreach { i =>
-        stageOrderedFile(
-          Seq(TurnEvent("__wm__", i - 1, "user",
-            new java.sql.Timestamp(maxTs + i * step))).toDS().toDF(),
-          s"$tmp/scratch_wm$i", watched, s"wm-$i.parquet",
-          base + (nChunks + i) * 10000L)
-      }
-      runOnce() // restart: recovered open sessions + remaining files
-      s.read.parquet(sink).filter($"conv_id" =!= "__wm__")
-        .select("conv_id", "session_seq", "n_turns", "session_start",
-          "session_end")
     }),
 
     // --- corpus-wide segment-level exact dedup ----------------------------------
@@ -2544,48 +2105,22 @@ object SparkEntry {
     // row-level joins on null-guarded key columns, never explode +
     // stateful re-aggregation; flags must equal the batch operator's.
     "q_stream_neardup" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_sneardup").toString
       val d = docs(s, dir)
       val standing = d.filter(col("doc_id") % 3 =!= 0)
-      standing.select(md5(col("text").cast("binary")).as("hash")).distinct()
-        .write.mode("overwrite").parquet(s"$tmp/idx_hashes")
-      Dedup.minhashBands(standing, "doc_id", "text")
-        .select("band_idx", "band_key").distinct()
-        .write.mode("overwrite").parquet(s"$tmp/idx_bands")
       val delta = d.filter(col("doc_id") % 3 === 0)
         .select("doc_id", "text")
-      val watched = s"$tmp/watched"
-      val nChunks = 3
-      val ordered = delta.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
+      Replay(s) { r =>
+        standing.select(md5(col("text").cast("binary")).as("hash")).distinct()
+          .write.parquet(r.path("idx_hashes"))
+        Dedup.minhashBands(standing, "doc_id", "text")
+          .select("band_idx", "band_key").distinct()
+          .write.parquet(r.path("idx_bands"))
+        r.toMemory(graft.streaming.StreamingFeatures.nearDupFlags(
+          r.stage(Replay.byRows(delta, 3, col("doc_id"))),
+          r.session.read.parquet(r.path("idx_hashes")),
+          r.session.read.parquet(r.path("idx_bands")),
+          "doc_id", "text"))
       }
-      val view = freshStreamView(s, "q_stream_neardup_sink_")
-      // state partitions sized to the replay (q_stream_sessionize_files
-      // pattern): per-batch floor is store-commit count, not data
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = graft.streaming.StreamingFeatures.nearDupFlags(
-            s.readStream.schema(delta.schema)
-              .option("maxFilesPerTrigger", "1").parquet(watched),
-            s.read.parquet(s"$tmp/idx_hashes"),
-            s.read.parquet(s"$tmp/idx_bands"),
-            "doc_id", "text")
-          .writeStream.outputMode("append")
-          .format("memory").queryName(view)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(view)
     }),
 
     // --- data-dependent mixture plan ---------------------------------------------
@@ -3043,8 +2578,7 @@ object SparkEntry {
     // dies on one bad line.
     "q_csv_ingest" -> ((s, dir) => {
       import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_csv").toString
+      val tmp = scratch("graft_verify_csv")
       turns(s, dir).select(concat(
           col("conv_id"), lit(","),
           when(col("turn_idx") % 11 === 3, lit("x"))
@@ -3065,37 +2599,17 @@ object SparkEntry {
     // the stream side never shuffles for the join (broadcast hash), and
     // the result must equal the batch join SQL.
     "q_stream_enrich" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_enrich").toString
-      val watched = s"$tmp/watched"
       val t = turns(s, dir)
         .select(col("conv_id"), col("turn_idx"), col("tool"), col("ts"))
       val dim = t.filter(col("tool").isNotNull).select(col("tool")).distinct()
         .withColumn("tool_cat", substring(col("tool"), 6, 1))
-      val nChunks = 3
-      val ordered = t.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("ts"), col("conv_id"), col("turn_idx"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
+      Replay(s) { r =>
+        val src = r.stage(
+          Replay.byRows(t, 3, col("ts"), col("conv_id"), col("turn_idx")))
+        r.toMemory(src.join(broadcast(dim), Seq("tool"))
+          .select(col("conv_id"), col("turn_idx"), col("tool"),
+            col("tool_cat")))
       }
-      val view = freshStreamView(s, "q_stream_enrich_sink_")
-      val q = s.readStream
-        .schema(t.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watched)
-        .join(broadcast(dim), Seq("tool"))
-        .select(col("conv_id"), col("turn_idx"), col("tool"), col("tool_cat"))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(view)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      s.table(view)
     }),
 
     // --- overlapping word-window chunking -----------------------------------------
@@ -3112,8 +2626,6 @@ object SparkEntry {
     // equal the batch interval-join SQL.
     "q_stream_join" -> ((s, dir) => {
       import graft.streaming.StreamingFeatures
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_sjoin").toString
       val t = turns(s, dir)
       val lBatch = t.filter(col("role") === "user")
         .select(col("conv_id"), col("turn_idx").as("u_turn_idx"),
@@ -3121,50 +2633,18 @@ object SparkEntry {
       val rBatch = t.filter(col("tool").isNotNull)
         .select(col("conv_id"), col("turn_idx").as("t_turn_idx"),
           col("tool"), col("ts").as("t_ts"))
-      def stageStream(df: DataFrame, tsCol: String, sub: String): String = {
-        val watched = s"$tmp/$sub"
+      Replay(s) { r =>
         // 2 files/side = 4 micro-batches total: still proves cross-batch
         // matching on both sides while halving the replay's state-commit
         // cadence (this query was the bench replay tail at 3/side)
-        val nChunks = 2
-        val ordered = df.withColumn("__chunk",
-          ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col(tsCol))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-        (1 to nChunks).foreach { i =>
-          stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-            s"$tmp/scratch_${sub}_$i", watched, s"chunk-$i.parquet",
-            1700000000000L + i * 10000L)
-        }
-        watched
-      }
-      val watchedL = stageStream(lBatch, "u_ts", "left")
-      val watchedR = stageStream(rBatch, "t_ts", "right")
-      val view = freshStreamView(s, "q_stream_join_sink_")
-      val lStream = s.readStream.schema(lBatch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watchedL)
-      val rStream = s.readStream.schema(rBatch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watchedR)
-      // state partitions sized to the replay (the q_stream_sessionize_files
-      // pattern): a stream-stream join runs 4 state-store instances per
-      // shuffle partition per batch, so the replay's per-batch floor is
-      // store-commit count, not data
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = StreamingFeatures
+        val lStream = r.stage(Replay.byRows(lBatch, 2, col("u_ts")), "left")
+        val rStream = r.stage(Replay.byRows(rBatch, 2, col("t_ts")), "right")
+        r.toMemory(StreamingFeatures
           .intervalJoin(lStream, "u_ts", rStream, "t_ts", "conv_id",
             windowSec = 3600L, watermark = "2 hours")
           .select(col("conv_id"), col("u_turn_idx"), col("t_turn_idx"),
-            col("tool"))
-          .writeStream.outputMode("append")
-          .format("memory").queryName(view)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(view)
+            col("tool")))
+      }
     }),
 
     // --- deterministic exact-k sample per stratum ---------------------------------
@@ -3553,9 +3033,6 @@ object SparkEntry {
     // original's lifetime and the output equals exact batch dedup.
     "q_stream_dedup_wm" -> ((s, dir) => {
       import graft.streaming.StreamingFeatures
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_sdwm").toString
-      val watched = s"$tmp/watched"
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val union = d.unionAll(
         d.filter(col("doc_id") % 3 === 0)
@@ -3564,35 +3041,12 @@ object SparkEntry {
         col("doc_id"),
         md5(col("text").cast("binary")).as("hash"),
         timestamp_seconds(lit(1700000000L) + (col("doc_id") % 900L)).as("ts"))
-      val nChunks = 4
-      val ordered = hashed.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("hash"), col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val view = freshStreamView(s, "stream_dedup_wm_")
-      val src = s.readStream.schema(hashed.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watched)
-      // state partitions sized to the replay (q_stream_sessionize_files
-      // pattern): per-batch floor is store-commit count, not data
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = StreamingFeatures
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(hashed, 4, col("hash"), col("doc_id")))
+        r.toMemory(StreamingFeatures
           .dedupWithinWatermark(src, "ts", Seq("hash"), "1 hour")
-          .select(col("doc_id"), col("hash"))
-          .writeStream.outputMode("append").format("memory").queryName(view)
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(view)
+          .select(col("doc_id"), col("hash")))
+      }
     }),
 
     // --- MAD robust outlier flags -----------------------------------------------
@@ -3665,44 +3119,17 @@ object SparkEntry {
     // operator. File-source replay across 4 micro-batches must land
     // counter-for-counter on the batch oracle.
     "q_stream_cms" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamcms").toString
-      val watched = s"$tmp/watched"
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val nChunks = 4
-      val ordered = d.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("doc_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_cms_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(d.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          val keyed = src.filter(col("text").isNotNull)
-            .select(explode(split(lower(col("text")), " ")).as("word"))
-            .filter(col("word") =!= "")
-            .select(conv(substring(md5(col("word").cast("binary")), 1, 15),
-              16, 10).cast("long").as("k"))
-          graft.ops.Sketches.cmsBuild(keyed, col("k"), 3, 32)
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select(col("row_idx"), col("counter_idx"), col("cnt"))
+      Replay(s) { r =>
+        val keyed = r.stage(Replay.byRows(d, 4, col("doc_id")))
+          .filter(col("text").isNotNull)
+          .select(explode(split(lower(col("text")), " ")).as("word"))
+          .filter(col("word") =!= "")
+          .select(conv(substring(md5(col("word").cast("binary")), 1, 15),
+            16, 10).cast("long").as("k"))
+        r.toMemory(graft.ops.Sketches.cmsBuild(keyed, col("k"), 3, 32),
+          outputMode = "complete")
+      }.select(col("row_idx"), col("counter_idx"), col("cnt"))
     }),
 
     // --- Gram-matrix PCA/covariance sufficient statistics ---------------------------
@@ -3800,44 +3227,18 @@ object SparkEntry {
     // merge (associativity, proven in Scd2CdcSpec, is what makes the
     // arbitrary chunking legal).
     "q_stream_cdc" -> ((s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_verify_streamcdc").toString
-      val watched = s"$tmp/watched"
       val feed = Tables.read(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"), col("value"),
           when(col("event_type") === "error" &&
               col("ts") >= lit("2024-01-16").cast("timestamp"), "d")
             .otherwise("u").as("op"))
-      val nChunks = 4
-      val ordered = feed.withColumn("__chunk",
-        ntile(nChunks).over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("event_id"))))
-        // staged once, written per chunk: share the single-task replay sort
-        .localCheckpoint(false)
-      (1 to nChunks).foreach { i =>
-        stageOrderedFile(ordered.filter(col("__chunk") === i).drop("__chunk"),
-          s"$tmp/scratch$i", watched, s"chunk-$i.parquet",
-          1700000000000L + i * 10000L)
-      }
-      val name = freshStreamView(s, "stream_cdc_")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try {
-          val src = s.readStream
-            .schema(feed.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watched)
-          graft.ops.Snapshot.latestWins(src, "user_id", Seq("ts", "event_id"))
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$tmp/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try q.awaitTermination() finally q.stop()
-      s.table(name).select(col("user_id"), col("ts"), col("event_id"),
+      Replay(s) { r =>
+        val src = r.stage(Replay.byRows(feed, 4, col("event_id")))
+        r.toMemory(
+          graft.ops.Snapshot.latestWins(src, "user_id", Seq("ts", "event_id")),
+          outputMode = "complete")
+      }.select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"), col("op"))
     }),
 

@@ -46,6 +46,17 @@ object GraftBridge {
         r +: spark.experimental.extraOptimizations
   }
 
+  /** A fresh directory under java.io.tmpdir that Spark deletes at JVM
+    * exit, if [[deleteTempDir]] has not deleted it before.
+    */
+  def tempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
+
+  def deleteTempDir(dir: java.io.File): Unit = {
+    org.apache.spark.util.Utils.deleteRecursively(dir)
+    org.apache.spark.util.ShutdownHookManager.removeShutdownDeleteDir(dir)
+  }
+
   def optimizedPlan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
 
