@@ -3,8 +3,13 @@ package graft.io
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+
+import graft.plans.AsOfFilterPushdown
 
 /** Checkpoint-resumable partitioned batch writes with per-partition
   * lineage + metrics (north rule: "resumable from checkpoint with
@@ -22,9 +27,35 @@ import org.apache.spark.sql.functions._
   *    recorded as a manifest entry `_manifest/bucket-N.json` carrying
   *    lineage (input path, run id) and metrics (row count);
   *  - a killed run leaves only staging garbage + already-committed
-  *    buckets; rerunning converges to the identical final output.
+  *    buckets; rerunning converges to the identical final output;
+  *  - a resume keeps only the remaining buckets' rows with a
+  *    [[RemainingBuckets]] predicate, which [[AsOfFilterPushdown]] carries
+  *    below `Lineage.observed` and into both inputs of the as-of join, so
+  *    only those rows are shuffled, windowed and joined.
   */
 object Checkpoint {
+
+  /** `pmod(hash(key), n) IN (remaining)`: Checkpoint's resume predicate,
+    * evaluated by its child. It is a node of its own so that
+    * [[AsOfFilterPushdown]] can tell it from any other filter: this one
+    * alone may move below a `CollectMetrics` node, so that an observation
+    * counts the rows a resume writes. A user's filter over `observe(...)`
+    * keeps Spark's meaning.
+    */
+  final case class RemainingBuckets(child: Expression)
+      extends UnaryExpression with Predicate {
+    override def eval(input: InternalRow): Any = child.eval(input)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      child.genCode(ctx)
+    override protected def withNewChildInternal(c: Expression): RemainingBuckets =
+      copy(child = c)
+  }
+
+  object RemainingBuckets {
+    def apply(key: Column, nBuckets: Int, remaining: Seq[Int]): Column =
+      GraftBridge.column(RemainingBuckets(GraftBridge.expression(
+        pmod(hash(key), lit(nBuckets)).isin(remaining: _*))))
+  }
 
   final case class BucketEntry(bucket: Int, rows: Long, input: String, runId: String)
 
@@ -55,8 +86,15 @@ object Checkpoint {
   ): Set[Int] = {
     val done = committedBuckets(out)
     if (done.size == nBuckets) return Set.empty
-    val bucketed = df.withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
-    val remaining = bucketed.filter(!col("__bucket").isin(done.toSeq: _*))
+    // a full write keeps every row and builds no predicate
+    val kept =
+      if (done.isEmpty) df
+      else {
+        GraftBridge.injectOptimization(df, AsOfFilterPushdown)
+        df.filter(RemainingBuckets(col(keyCol), nBuckets,
+          (0 until nBuckets).filterNot(done)))
+      }
+    val remaining = kept.withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
 
     val staging = s"$out/_staging_$runId"
     // one distributed pass over the remaining rows

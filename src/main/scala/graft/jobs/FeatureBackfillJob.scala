@@ -14,6 +14,8 @@ import graft.metrics.Lineage
   *
   * Re-running after a kill resumes: committed buckets are skipped, output
   * converges to the clean-run result (CheckpointSpec proves equality).
+  * `observed_rows` and `null_ts` count the rows this run wrote: all rows
+  * on a first run, the promoted buckets' rows on a resume.
   * In production the parquet source/sink swaps for Iceberg (the manifest
   * maps to snapshot commits — SURVEY.md §7.4 item 7); nothing else
   * changes.

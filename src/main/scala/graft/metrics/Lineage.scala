@@ -16,6 +16,11 @@ object Lineage {
     * df2.write.parquet(...)           // any action
     * val m = obs.get                  // Map(rows -> ..., nulls -> ...)
     * }}}
+    * The observation counts the rows of `df`, whatever filters the action
+    * puts on top of it — with one exception: when `df2` goes through
+    * `Checkpoint.write` and buckets are already committed, its resume
+    * predicate moves below the observation, which then counts only the
+    * rows of the buckets this write promotes.
     */
   def observed(df: DataFrame, tsCol: String): (DataFrame, Observation) = {
     val obs = Observation()

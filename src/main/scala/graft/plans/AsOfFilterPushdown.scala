@@ -1,30 +1,83 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, PredicateHelper}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeMap, Expression, PredicateHelper}
+import org.apache.spark.sql.catalyst.optimizer.PushDownPredicates
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types._
 
-/** Custom optimizer rule: push anchor-side predicates THROUGH the native
-  * as-of join. Catalyst's stock filter pushdown doesn't know our node, so
-  * without this a `features.filter(anchorPred)` scans and merges every
-  * anchor row before discarding — at 10^12 turns that is the difference
-  * between reading a partition and reading the table.
+import graft.io.Checkpoint.RemainingBuckets
+
+/** Custom optimizer rule: push predicates THROUGH the native as-of join and
+  * Checkpoint's resume predicate through an observation. Catalyst's stock
+  * filter pushdown knows neither our node nor how to cross a
+  * `CollectMetrics`, so without this a `features.filter(anchorPred)` scans
+  * and merges every anchor row before discarding — at 10^12 turns that is
+  * the difference between reading a partition and reading the table.
   *
-  * Safe because each anchor row's match depends only on the right side and
-  * its own (key, ts) — dropping anchors never changes other anchors'
-  * matches. Right-side predicates are NOT pushable (dropping observations
-  * changes which one is "latest").
+  *  - A deterministic predicate over the left input moves into the left
+  *    input. Safe because each anchor row's match depends only on the
+  *    right side and its own (key, ts) — dropping anchors never changes
+  *    other anchors' matches.
+  *  - One that reads only the join keys is ALSO copied into the right
+  *    input, the left keys rewritten to the right keys: a match needs
+  *    equal keys, so the right rows it drops could only have matched
+  *    anchors it drops too. Only for keys whose equality is identity of
+  *    value (not floating point, not a collated string), where a predicate
+  *    cannot tell two equal keys apart. Any other right-side predicate is
+  *    NOT pushable (dropping observations changes which one is "latest").
+  *  - A [[RemainingBuckets]] predicate moves below a `CollectMetrics`
+  *    (`Lineage.observed`), so that a resume's observation counts the rows
+  *    it writes. Any other filter over an observation stays above it.
+  *
+  * The rule runs in Spark's user-provided batch, after the stock pushdown;
+  * whatever it moves is handed to `PushDownPredicates` again, so it goes
+  * on through the `Project`, `Window` and `Aggregate` nodes below.
   */
 object AsOfFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, j: AsOfJoinPlan) =>
-      val (pushable, kept) = splitConjunctivePredicates(cond)
-        .partition(p =>
-          p.deterministic && p.references.subsetOf(j.left.outputSet))
-      if (pushable.isEmpty) f
-      else {
-        val newJoin = j.copy(left = Filter(pushable.reduce(And), j.left))
-        kept.reduceOption(And).map(Filter(_, newJoin)).getOrElse(newJoin)
-      }
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val moved = plan.transform {
+      case f @ Filter(cond, m: CollectMetrics) =>
+        val (marked, kept) = splitConjunctivePredicates(cond)
+          .partition(_.isInstanceOf[RemainingBuckets])
+        if (marked.isEmpty) f
+        else {
+          val below = m.withNewChildren(Seq(Filter(marked.reduce(And), m.child)))
+          kept.reduceOption(And).map(Filter(_, below)).getOrElse(below)
+        }
+      case f @ Filter(cond, j: AsOfJoinPlan) =>
+        val (pushable, kept) = splitConjunctivePredicates(cond)
+          .partition(p =>
+            p.deterministic && p.references.subsetOf(j.left.outputSet))
+        if (pushable.isEmpty) f
+        else {
+          val toRight = pushable.flatMap(onRightKeys(j, _))
+          val newJoin = j.copy(
+            left = Filter(pushable.reduce(And), j.left),
+            right = toRight.reduceOption(And)
+              .map(Filter(_, j.right)).getOrElse(j.right))
+          kept.reduceOption(And).map(Filter(_, newJoin)).getOrElse(newJoin)
+        }
+    }
+    if (moved fastEquals plan) plan else PushDownPredicates(moved)
+  }
+
+  /** `p` over the right keys, if it reads only left keys that pair with a
+    * right key of the same type whose equality is identity of value.
+    */
+  private def onRightKeys(j: AsOfJoinPlan, p: Expression): Option[Expression] = {
+    val keyMap = AttributeMap(j.leftKeys.zip(j.rightKeys).collect {
+      case (l: Attribute, r) if l.dataType == r.dataType && exactEquality(l.dataType) =>
+        l -> r
+    })
+    if (!p.references.forall(keyMap.contains)) None
+    else Some(p.transform { case a: Attribute if keyMap.contains(a) => keyMap(a) })
+  }
+
+  private def exactEquality(t: DataType): Boolean = t match {
+    case StringType | BinaryType | BooleanType | ByteType | ShortType |
+        IntegerType | LongType | DateType | TimestampType | TimestampNTZType |
+        _: DecimalType => true
+    case _ => false
   }
 }

@@ -57,6 +57,12 @@ object GraftBridge {
     org.apache.spark.util.ShutdownHookManager.removeShutdownDeleteDir(dir)
   }
 
+  /** Blocks until every event posted so far has reached the listeners
+    * (query-execution listeners run on the listener bus, after the action).
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def optimizedPlan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
 

@@ -1,7 +1,6 @@
 package graft.io
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -28,7 +27,7 @@ class BucketedSpec extends AnyFunSuite {
   }
 
   private lazy val table: String = {
-    val path = Files.createTempDirectory("graft_bucketed").toString
+    val path = GraftBridge.tempDir("graft_bucketed").toString
     val df = TranscriptGen.generateDF(spark, 200)
     Bucketed.writeTranscript(df, "t_bucketed", path, nBuckets = 8)
     "t_bucketed"
@@ -36,7 +35,7 @@ class BucketedSpec extends AnyFunSuite {
 
   /** Same rows, plain (bucket-spec-less) parquet roundtrip. */
   private lazy val plainDir: String = {
-    val path = Files.createTempDirectory("graft_plain").toString
+    val path = GraftBridge.tempDir("graft_plain").toString
     TranscriptGen.generateDF(spark, 200).write.mode("overwrite").parquet(path)
     path
   }
@@ -71,7 +70,7 @@ class BucketedSpec extends AnyFunSuite {
     // the production swap (docs/ICEBERG.md) replaces the implementation
     // behind this trait; downstream code must depend only on the trait
     val layout: TranscriptLayout = Bucketed
-    val path = Files.createTempDirectory("graft_seam").toString
+    val path = GraftBridge.tempDir("graft_seam").toString
     layout.writeTranscript(
       TranscriptGen.generateDF(spark, 120), "t_seam", path, nBuckets = 4)
     def key(df: org.apache.spark.sql.DataFrame) = df

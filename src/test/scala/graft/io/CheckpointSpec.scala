@@ -2,22 +2,33 @@ package graft.io
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Pipeline, TestSpark}
 import graft.metrics.Lineage
+import graft.plans.AsOfJoinExec
 import graft.schema.TranscriptGen
 
 /** Checkpoint/resume: a partial run + resume must equal a clean run
   * (north-rule resumability), and manifests must carry per-partition
   * lineage + row counts.
   */
-class CheckpointSpec extends AnyFunSuite {
+class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_ckpt").toString
+    GraftBridge.tempDir("graft_ckpt").toString
 
   test("clean write commits all buckets with manifest metrics") {
     val df = TranscriptGen.generateDF(spark, 50)
@@ -145,6 +156,116 @@ class CheckpointSpec extends AnyFunSuite {
     val m = obs.get
     assert(m("rows") == n)
     assert(m("null_ts") == 0L)
+  }
+
+  /** `FeatureBackfillJob`'s body over `turns`: returns the observation. */
+  private def backfill(turns: DataFrame, out: String, runId: String): Map[String, Any] = {
+    val (features, obs) = Lineage.observed(Pipeline.featuresFromTurns(turns), "ts")
+    Checkpoint.write(features, "conv_id", out, 8, "spec", runId)
+    obs.get
+  }
+
+  private def sorted(out: String) =
+    Checkpoint.read(spark, out).orderBy("conv_id", "turn_idx").collect().toSeq
+
+  /** Executed plans of the actions `body` runs. */
+  private def captured(body: => Unit): Seq[SparkPlan] = {
+    val seen = mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.synchronized(seen += qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftBridge.drainListeners(spark)
+    spark.listenerManager.register(listener)
+    try { body; GraftBridge.drainListeners(spark) }
+    finally spark.listenerManager.unregister(listener)
+    seen.synchronized(seen.toList)
+  }
+
+  /** Rows out of the first operator at or below `p` that counts them (a
+    * shuffle's records written, else `numOutputRows`).
+    */
+  private def rowsOut(p: SparkPlan): Option[Long] = p match {
+    case s: QueryStageExec => rowsOut(s.plan)
+    case e: ShuffleExchangeExec => e.metrics.get("shuffleRecordsWritten").map(_.value)
+    case c if c.metrics.contains("numOutputRows") => Some(c.metrics("numOutputRows").value)
+    case u: UnaryExecNode => rowsOut(u.child)
+    case _ => None
+  }
+
+  /** The nodes `pick` selects that have no such node below them. */
+  private def lowest(plans: Seq[SparkPlan])(
+      pick: PartialFunction[SparkPlan, SparkPlan]): Seq[SparkPlan] =
+    plans.flatMap(collect(_)(pick))
+      .filter(n => n.children.flatMap(collect(_)(pick)).isEmpty)
+
+  test("resume: the observation counts exactly the promoted buckets' rows") {
+    val turns = TranscriptGen.generateDF(spark, 60)
+    val out = tmp()
+    val full = backfill(turns, out, "o1")
+    assert(full("rows") == turns.count())
+    Checkpoint.invalidate(out, Set(2, 5))
+    val resumed = backfill(turns, out, "o2")
+    val (rows, _) = Checkpoint.metrics(out)
+    assert(resumed("rows") == rows(2) + rows(5))
+    assert(rows.values.sum == turns.count())
+  }
+
+  test("a plain observe followed by a filter still counts every row") {
+    val df = TranscriptGen.generateDF(spark, 30)
+    // the resume rule is registered on the session by any resume
+    val out = tmp()
+    Checkpoint.write(df, "conv_id", out, 8, "spec", "f1")
+    Checkpoint.invalidate(out, Set(1))
+    Checkpoint.write(df, "conv_id", out, 8, "spec", "f2")
+    val (observed, obs) = Lineage.observed(df, "ts")
+    // the same bucket test a resume makes, written by the user
+    val kept = observed.filter(pmod(hash(col("conv_id")), lit(8)).isin(1))
+    kept.write.format("noop").mode("overwrite").save()
+    assert(obs.get("rows") == df.count())
+    assert(kept.count() < df.count())
+  }
+
+  test("resume over plain parquet windows and joins only the invalidated " +
+    "buckets' rows") {
+    val dir = tmp()
+    TranscriptGen.generateDF(spark, 60).write.mode("overwrite").parquet(dir)
+    val turns = spark.read.parquet(dir)
+    val out = tmp()
+    backfill(turns, out, "w1")
+    val inv = Set(0, 3, 6)
+    Checkpoint.invalidate(out, inv)
+    val plans = captured(backfill(turns, out, "w2"))
+    val (rows, _) = Checkpoint.metrics(out)
+    val invRows = inv.toSeq.map(rows).sum
+    val lowestWindow = lowest(plans) { case w: WindowExec => w }
+    assert(lowestWindow.nonEmpty)
+    assert(lowestWindow.flatMap(w => rowsOut(w.children.head)).sum == invRows)
+    // the right input of the as-of: the invalidated buckets' tool turns
+    val invTools = turns.filter(col("tool").isNotNull &&
+      pmod(hash(col("conv_id")), lit(8)).isin(inv.toSeq: _*)).count()
+    val rightAgg = lowest(plans.flatMap(collect(_) { case j: AsOfJoinExec => j.right })) {
+      case a: BaseAggregateExec => a
+    }
+    assert(rightAgg.nonEmpty)
+    assert(rightAgg.flatMap(a => rowsOut(a.children.head)).sum == invTools)
+  }
+
+  test("resume over Bucketed.read plans zero shuffles") {
+    val table = "t_ckpt_resume"
+    Bucketed.writeTranscript(TranscriptGen.generateDF(spark, 60), table, tmp(), nBuckets = 8)
+    val clean = tmp()
+    backfill(Bucketed.read(spark, table), clean, "b0")
+    val out = tmp()
+    backfill(Bucketed.read(spark, table), out, "b1")
+    Checkpoint.invalidate(out, Set(1, 6))
+    val plans = captured(backfill(Bucketed.read(spark, table), out, "b2"))
+      .filter(p => collect(p) { case j: AsOfJoinExec => j }.nonEmpty)
+    assert(plans.nonEmpty)
+    val exchanges = plans.flatMap(collect(_) { case e: ShuffleExchangeExec => e })
+    assert(exchanges.isEmpty, s"resume shuffles:\n${plans.mkString("\n")}")
+    assert(sorted(out) == sorted(clean))
   }
 
   test("partition histogram reports skew") {

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +15,7 @@ class CsvIngestSpec extends AnyFunSuite {
     StructField("role", StringType)))
 
   test("PERMISSIVE csv: partial parse keeps good fields, raw line quarantined, arity errors flagged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_spec")
+    val dir = GraftBridge.tempDir("graft_csv_spec").toPath
     java.nio.file.Files.writeString(dir.resolve("a.csv"),
       "c1,5,user\nc2,x,assistant\nc3,7\nc4,8,tool,extra\n")
     val got = CsvIngest.flagged(

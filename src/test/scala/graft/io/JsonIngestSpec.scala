@@ -3,6 +3,7 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -18,7 +19,7 @@ class JsonIngestSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def writeJsonl(lines: Seq[String]): Path = {
-    val dir = Files.createTempDirectory("graft_jsonl")
+    val dir = GraftBridge.tempDir("graft_jsonl").toPath
     Files.write(
       dir.resolve("turns.jsonl"),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
@@ -36,7 +37,7 @@ class JsonIngestSpec extends AnyFunSuite {
       // corrupt JSON line -> PERMISSIVE all-null row -> quarantined too
       """{"conv_id": BROKEN"""
     ))
-    val outDir = Files.createTempDirectory("graft_ingest").toString
+    val outDir = GraftBridge.tempDir("graft_ingest").toString
 
     val df = JsonIngest.readJsonl(
       spark, inDir.resolve("turns.jsonl").toString, Turn.schema)
@@ -71,7 +72,7 @@ class JsonIngestSpec extends AnyFunSuite {
 
   test("empty input ingests to (0, 0) instead of failing") {
     val inDir = writeJsonl(Seq.empty)
-    val outDir = Files.createTempDirectory("graft_ingest_empty").toString
+    val outDir = GraftBridge.tempDir("graft_ingest_empty").toString
     val df = JsonIngest.readJsonl(
       spark, inDir.resolve("turns.jsonl").toString, Turn.schema)
     val res = JsonIngest.ingest(df, Pipeline.turnSpec, outDir)
@@ -83,7 +84,7 @@ class JsonIngestSpec extends AnyFunSuite {
       """{"conv_id":"c1","turn_idx":0,"role":"user","text":"ok","tool":null,"ts":"2026-01-01T00:00:00Z"}""",
       """{"conv_id":"c1","turn_idx":1,"role":"user","text":"","tool":null,"ts":"2026-01-01T00:00:01Z"}"""
     ))
-    val outDir = Files.createTempDirectory("graft_ingest_prune").toString
+    val outDir = GraftBridge.tempDir("graft_ingest_prune").toString
     val df = JsonIngest.readJsonl(
       spark, inDir.resolve("turns.jsonl").toString, Turn.schema)
     JsonIngest.ingest(df, Pipeline.turnSpec, outDir)

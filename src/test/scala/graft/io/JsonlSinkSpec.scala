@@ -2,6 +2,7 @@ package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -12,7 +13,7 @@ class JsonlSinkSpec extends AnyFunSuite {
 
   test("jsonl roundtrip recovers id and text exactly, escaping included; " +
     "one file per (stratum, shard) dir") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val tmp = GraftBridge.tempDir("graft_jsonl").toString
     val df = Seq(
       (1L, "plain text"),
       (2L, "quote\" and back\\slash"),

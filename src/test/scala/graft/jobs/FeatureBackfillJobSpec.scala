@@ -1,7 +1,6 @@
 package graft.jobs
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -14,7 +13,7 @@ class FeatureBackfillJobSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("backfill job writes all buckets with manifest + correct rows") {
-    val out = Files.createTempDirectory("graft_backfill").toString
+    val out = GraftBridge.tempDir("graft_backfill").toString
     val features = graft.Pipeline.features(spark, "/root/testdata/sf0.001")
     val expected = features.count()
     val promoted = Checkpoint.write(features, "conv_id", out, 8,

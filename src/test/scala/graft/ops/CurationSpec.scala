@@ -2,6 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -172,8 +173,7 @@ class CurationSpec extends AnyFunSuite {
       (0L, "A", 900L), (1L, "A", 900L), (2L, "A", 900L),
       (10L, "B", 2500L), (11L, "B", 100L))
       .toDF("doc_id", "lang", "tok")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_writeshards").toString
+    val tmp = GraftBridge.tempDir("graft_writeshards").toString
     Curation.writeShards(df, "lang", "doc_id", col("tok"), 1000L, tmp)
     // layout: one file per (lang, shard_seq) dir
     val shardDirs = new java.io.File(tmp).listFiles

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
@@ -157,7 +158,7 @@ class LayoutSpec extends AnyFunSuite {
       "one data file per (part, group)") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft_compact_spec").toString
+    val tmp = GraftBridge.tempDir("graft_compact_spec").toString
     val small = s"$tmp/small"
     val out = s"$tmp/compacted"
     val rnd = new scala.util.Random(59)

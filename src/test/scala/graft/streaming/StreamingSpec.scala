@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
-
+import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -16,7 +15,7 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def stagedTurns(): String = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = GraftBridge.tempDir("graft_stream").toString
     TranscriptGen.generateDF(spark, 20).write.mode("overwrite").parquet(dir)
     dir
   }
