@@ -1,0 +1,25 @@
+package graft
+
+import java.util.{Collections, WeakHashMap}
+
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
+
+import graft.plans.{AsOfFilterPushdown, AsOfStrategy}
+
+/** Registers the native as-of join's planner strategy and pushdown rule,
+  * once, in each session that loads it: from graft's `META-INF/services`
+  * entry, from `spark.sql.extensions` (which [[GraftSession]] sets, for
+  * classpaths without graft's resources), or both.
+  */
+class GraftExtensions extends SparkSessionExtensionsProvider {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    if (GraftExtensions.applied.add(ext)) {
+      ext.injectPlannerStrategy(_ => AsOfStrategy)
+      ext.injectOptimizerRule(_ => AsOfFilterPushdown)
+    }
+}
+
+object GraftExtensions {
+  private val applied = Collections.synchronizedSet(Collections.newSetFromMap(
+    new WeakHashMap[SparkSessionExtensions, java.lang.Boolean]))
+}

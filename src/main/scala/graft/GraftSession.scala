@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory: one place for the configs that matter at
-  * scale (AQE, shuffle partition sizing, UTC) so every entrypoint — tests,
-  * Verify, Bench — runs the same engine configuration.
+  * scale (AQE, shuffle partition sizing, UTC) so the tests, Bench and the
+  * backfill job run the same engine configuration.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -12,6 +12,7 @@ object GraftSession {
       .builder()
       .master(master)
       .appName("graft")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

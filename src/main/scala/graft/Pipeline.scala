@@ -15,9 +15,10 @@ import graft.rules.VRule._
   * running tool-call count, and a gap session id.
   *
   * Plan shape at scale: the gate is a narrow projection fused into the
-  * scan; all window features share one (conv_id)-partitioned sort; the
-  * as-of is one additional union-merge on the same key. Two shuffles total
-  * regardless of feature count.
+  * scan; all window features share one (conv_id)-partitioned sort. Over a
+  * plain table the executed plan has three exchanges, whatever the feature
+  * count: conv_id (windows), (conv_id, ts) (observations) and conv_id
+  * (as-of right side).
   */
 object Pipeline {
 

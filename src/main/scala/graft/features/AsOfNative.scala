@@ -2,7 +2,7 @@ package graft.features
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 
-import graft.plans.{AsOfJoinPlan, AsOfStrategy}
+import graft.plans.AsOfJoinPlan
 
 /** User-facing API for the NATIVE as-of join (custom LogicalPlan +
   * Strategy + SparkPlan — SURVEY.md §7.3 tier (c)). Same semantics and
@@ -25,8 +25,6 @@ object AsOfNative {
       allowExactMatches: Boolean = true,
       toleranceMs: Option[Long] = None
   ): DataFrame = {
-    GraftBridge.injectStrategy(left, AsOfStrategy)
-    GraftBridge.injectOptimization(left, graft.plans.AsOfFilterPushdown)
     val lp = GraftBridge.logicalPlan(left)
     // fresh exprIds on the right side: when both inputs share lineage
     // (self-as-of), duplicate exprIds confuse column pruning/binding —

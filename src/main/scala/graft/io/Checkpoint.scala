@@ -89,11 +89,8 @@ object Checkpoint {
     // a full write keeps every row and builds no predicate
     val kept =
       if (done.isEmpty) df
-      else {
-        GraftBridge.injectOptimization(df, AsOfFilterPushdown)
-        df.filter(RemainingBuckets(col(keyCol), nBuckets,
-          (0 until nBuckets).filterNot(done)))
-      }
+      else df.filter(RemainingBuckets(col(keyCol), nBuckets,
+        (0 until nBuckets).filterNot(done)))
     val remaining = kept.withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
 
     val staging = s"$out/_staging_$runId"

@@ -1,5 +1,7 @@
 package graft.jobs
 
+import org.apache.spark.sql.SparkSession
+
 import graft.{GraftSession, Pipeline}
 import graft.io.Checkpoint
 import graft.metrics.Lineage
@@ -15,30 +17,32 @@ import graft.metrics.Lineage
   * Re-running after a kill resumes: committed buckets are skipped, output
   * converges to the clean-run result (CheckpointSpec proves equality).
   * `observed_rows` and `null_ts` count the rows this run wrote: all rows
-  * on a first run, the promoted buckets' rows on a resume.
+  * on a first run, and on a resume the promoted buckets' rows, if any.
   * In production the parquet source/sink swaps for Iceberg (the manifest
   * maps to snapshot commits — SURVEY.md §7.4 item 7); nothing else
   * changes.
   */
 object FeatureBackfillJob {
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    try println(run(spark, args)) finally spark.stop()
+  }
+
+  /** One backfill with `main`'s arguments; returns the run's JSON record. */
+  def run(spark: SparkSession, args: Array[String]): String = {
     val sfDir = args(0)
     val outDir = args(1)
     val nBuckets = if (args.length > 2) args(2).toInt else 32
     val runId =
       if (args.length > 3) args(3)
       else s"run_${java.util.UUID.randomUUID().toString.take(8)}"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = GraftSession.local(cpus)
-
-    val (features, obs) = Lineage.observed(Pipeline.features(spark, sfDir), "ts")
-    val promoted =
-      Checkpoint.write(features, "conv_id", outDir, nBuckets, sfDir, runId)
-    val metrics = obs.get
+    // over a fully committed output no action would fill the observation
+    val done = Checkpoint.committedBuckets(outDir).size == nBuckets
+    val (promoted, metrics) = if (done) (Set.empty[Int], Map.empty[String, Any]) else {
+      val (features, obs) = Lineage.observed(Pipeline.features(spark, sfDir), "ts")
+      (Checkpoint.write(features, "conv_id", outDir, nBuckets, sfDir, runId), obs.get)
+    }
     val (bucketRows, skew) = Checkpoint.metrics(outDir)
-    println(
-      s"""{"run_id":"$runId","input":"$sfDir","out":"$outDir","buckets_promoted":${promoted.size},"buckets_total":${bucketRows.size},"rows":${bucketRows.values.sum},"observed_rows":${metrics.getOrElse("rows", -1)},"null_ts":${metrics.getOrElse("null_ts", -1)},"bucket_skew":${f"$skew%.3f"}}"""
-    )
-    spark.stop()
+    s"""{"run_id":"$runId","input":"$sfDir","out":"$outDir","buckets_promoted":${promoted.size},"buckets_total":${bucketRows.size},"rows":${bucketRows.values.sum},"observed_rows":${metrics.getOrElse("rows", 0)},"null_ts":${metrics.getOrElse("null_ts", 0)},"bucket_skew":${f"$skew%.3f"}}"""
   }
 }

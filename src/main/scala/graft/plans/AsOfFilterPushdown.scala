@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeMap, Expression, PredicateHelper}
-import org.apache.spark.sql.catalyst.optimizer.PushDownPredicates
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
@@ -30,13 +29,13 @@ import graft.io.Checkpoint.RemainingBuckets
   *    (`Lineage.observed`), so that a resume's observation counts the rows
   *    it writes. Any other filter over an observation stays above it.
   *
-  * The rule runs in Spark's user-provided batch, after the stock pushdown;
-  * whatever it moves is handed to `PushDownPredicates` again, so it goes
-  * on through the `Project`, `Window` and `Aggregate` nodes below.
+  * [[graft.GraftExtensions]] puts the rule in Spark's fixed-point
+  * operator-optimization batches, next to `PushDownPredicates`, so whatever
+  * it moves goes on through the `Project`, `Window` and `Aggregate` below.
   */
 object AsOfFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val moved = plan.transform {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transform {
       case f @ Filter(cond, m: CollectMetrics) =>
         val (marked, kept) = splitConjunctivePredicates(cond)
           .partition(_.isInstanceOf[RemainingBuckets])
@@ -59,8 +58,6 @@ object AsOfFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
           kept.reduceOption(And).map(Filter(_, newJoin)).getOrElse(newJoin)
         }
     }
-    if (moved fastEquals plan) plan else PushDownPredicates(moved)
-  }
 
   /** `p` over the right keys, if it reads only left keys that pair with a
     * right key of the same type whose equality is identity of value.

@@ -1,14 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkStrategyBridge
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Planner strategy mapping the logical AsOfJoinPlan to its physical
-  * sort-merge exec (injected via `experimental.extraStrategies` — the
-  * standard extension-point pattern).
+  * sort-merge exec (registered per session by [[graft.GraftExtensions]]).
   */
-object AsOfStrategy extends SparkStrategyBridge {
+object AsOfStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsOfJoinPlan =>
       AsOfJoinExec(planLater(p.left), planLater(p.right), p.leftKeys,

@@ -28,24 +28,6 @@ object GraftBridge {
     classic.Dataset.ofRows(spark, plan)
   }
 
-  /** Registers a planner strategy once per session. */
-  def injectStrategy(df: Dataset[_], s: SparkStrategyBridge): Unit = {
-    val spark = df.asInstanceOf[classic.Dataset[_]].sparkSession
-    if (!spark.experimental.extraStrategies.contains(s))
-      spark.experimental.extraStrategies =
-        s +: spark.experimental.extraStrategies
-  }
-
-  /** Registers a custom optimizer rule once per session. */
-  def injectOptimization(
-      df: Dataset[_],
-      r: catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]): Unit = {
-    val spark = df.asInstanceOf[classic.Dataset[_]].sparkSession
-    if (!spark.experimental.extraOptimizations.contains(r))
-      spark.experimental.extraOptimizations =
-        r +: spark.experimental.extraOptimizations
-  }
-
   /** A fresh directory under java.io.tmpdir that Spark deletes at JVM
     * exit, if [[deleteTempDir]] has not deleted it before.
     */
@@ -75,9 +57,3 @@ object GraftBridge {
   def sparkPlan(df: Dataset[_]): execution.SparkPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.sparkPlan
 }
-
-/** Public alias for the planner Strategy base (package-private-friendly
-  * extension point used by graft's custom operators).
-  */
-abstract class SparkStrategyBridge
-    extends org.apache.spark.sql.execution.SparkStrategy

@@ -14,7 +14,8 @@ class EntrySmokeSpec extends AnyFunSuite {
 
   test("all queries execute at sf0.001") {
     // every query also leaves the shared session as it found it: same
-    // conf, no new temp view, and no streaming replay's scratch dir
+    // conf and planner state, no new temp view, and no streaming replay's
+    // scratch dir
     val dir = "/root/testdata/sf0.001"
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def tempViews: Set[String] = spark.catalog.listTables().collect()
@@ -23,9 +24,14 @@ class EntrySmokeSpec extends AnyFunSuite {
       .filter(_.startsWith(graft.streaming.Replay.ScratchPrefix))
     SparkEntry.queries.foreach { case (name, fn) =>
       val (conf, views, dirs) = (spark.conf.getAll, tempViews, replayDirs)
+      val (strategies, rules) = (spark.experimental.extraStrategies,
+        spark.experimental.extraOptimizations)
       val n = fn(spark, dir).count()
       assert(n >= 0, name)
       assert(spark.conf.getAll == conf, s"$name changed the session conf")
+      assert(spark.experimental.extraStrategies == strategies &&
+        spark.experimental.extraOptimizations == rules,
+        s"$name changed the session's planner strategies or optimizer rules")
       assert((tempViews -- views).isEmpty, s"$name left a temp view")
       if (name.startsWith("q_stream_"))
         assert((replayDirs -- dirs).isEmpty, s"$name left replay scratch")

@@ -82,7 +82,10 @@ class AsOfNativeSpec extends AnyFunSuite {
   }
 
   test("AsOfFilterPushdown pushes anchor predicates below the join") {
-    val (anchors, right) = randomCase(99)
+    // non-local inputs: Spark folds a Filter over a LocalRelation into it
+    val (anchors, right) = randomCase(99) match {
+      case (a, r) => (a.localCheckpoint(), r.localCheckpoint())
+    }
     val joined = AsOfNative.joinBackward(anchors, right, Seq("conv_id"))
     val filtered = joined.filter(org.apache.spark.sql.functions.col("turn_idx") > 50)
     val opt = org.apache.spark.sql.GraftBridge.optimizedPlan(filtered)

@@ -117,7 +117,10 @@ class ResumePropertySpec extends AnyFunSuite {
     "afterwards; a ts predicate never reaches the right input") {
     for (seed <- 1 to 12) {
       val rnd = new Random(seed)
-      val (anchors, right) = randomJoinInput(seed)
+      // non-local inputs: Spark folds a Filter over a LocalRelation into it
+      val (anchors, right) = randomJoinInput(seed) match {
+        case (a, r) => (a.localCheckpoint(), r.localCheckpoint())
+      }
       val keys = if (seed % 2 == 0) Seq("conv_id", "grp") else Seq("conv_id")
       val keyPred: Column = seed % 3 match {
         case 0 => col("conv_id").isin("k0", "k2")
