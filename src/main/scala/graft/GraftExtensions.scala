@@ -4,10 +4,11 @@ import java.util.{Collections, WeakHashMap}
 
 import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 
-import graft.plans.{AsOfFilterPushdown, AsOfStrategy}
+import graft.plans.{AsOfFilterPushdown, AsOfStrategy, StackedWindowFusion}
 
 /** Registers the native as-of join's planner strategy and pushdown rule,
-  * once, in each session that loads it: from graft's `META-INF/services`
+  * and the rule that fuses stacked window passes, once, in each session
+  * that loads it: from graft's `META-INF/services`
   * entry, from `spark.sql.extensions` (which [[GraftSession]] sets, for
   * classpaths without graft's resources), or both.
   */
@@ -16,6 +17,7 @@ class GraftExtensions extends SparkSessionExtensionsProvider {
     if (GraftExtensions.applied.add(ext)) {
       ext.injectPlannerStrategy(_ => AsOfStrategy)
       ext.injectOptimizerRule(_ => AsOfFilterPushdown)
+      ext.injectOptimizerRule(_ => StackedWindowFusion)
     }
 }
 

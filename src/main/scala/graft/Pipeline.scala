@@ -15,10 +15,12 @@ import graft.rules.VRule._
   * running tool-call count, and a gap session id.
   *
   * Plan shape at scale: the gate is a narrow projection fused into the
-  * scan; all window features share one (conv_id)-partitioned sort. Over a
-  * plain table the executed plan has three exchanges, whatever the feature
-  * count: conv_id (windows), (conv_id, ts) (observations) and conv_id
-  * (as-of right side).
+  * scan; all window features share one (conv_id)-partitioned sort and run
+  * in two window passes (lag, LOCF, running count and the session's
+  * previous ts in one, `plans.StackedWindowFusion`; the session running
+  * sum over the boundary flags in the second). Over a plain table the
+  * executed plan has two exchanges, one per as-of side, both on conv_id;
+  * over a table bucketed on conv_id it has none (`PipelinePlanSpec`).
   */
 object Pipeline {
 
@@ -63,10 +65,11 @@ object Pipeline {
     // The NATIVE sort-merge exec (custom plan) is ~6.7x faster than the
     // union-merge formulation at 25M rows: each side sorts separately and
     // the merge streams, instead of window-scanning the combined union.
+    // Of tool turns sharing a ts, the latest turn wins: the exec sorts the
+    // right side by (conv_id, ts, turn_idx) and keeps the last row.
     val obs = turns
       .filter(col("tool").isNotNull)
-      .groupBy(col("conv_id"), col("ts"))
-      .agg(max_by(col("tool"), col("turn_idx")).as("last_tool"))
-    AsOfNative.joinBackward(withWin, obs, Seq("conv_id"))
+      .select(col("conv_id"), col("ts"), col("turn_idx"), col("tool").as("last_tool"))
+    AsOfNative.joinBackward(withWin, obs, Seq("conv_id"), rightOrderBy = Seq("turn_idx"))
   }
 }

@@ -9,10 +9,13 @@ import graft.plans.AsOfJoinPlan
   * column contract as [[AsOf.joinBackward]] (incl. toleranceMs);
   * physically a true per-partition sort-merge instead of a union-merge.
   *
-  * Contract shared with the union-merge variant: the right side should be
-  * unique per (keys, rightTs) — with duplicate timestamps "last wins" is
-  * sort-order-dependent in BOTH implementations. Pre-aggregate (as
-  * Pipeline does with max_by) when duplicates are possible.
+  * Right rows that share (keys, rightTs): `joinBackward`'s `rightOrderBy`
+  * breaks the tie — the match is the LAST such row in ascending
+  * `rightOrderBy` order (`rightOrderBy = Seq("turn_idx")` is the latest
+  * turn, as Pipeline uses it), and those columns are not returned. Without
+  * it, "last wins" among them is sort-order-dependent, as it is in the
+  * union-merge variant: make the right side unique per (keys, rightTs) or
+  * name a tie-break.
   */
 object AsOfNative {
 
@@ -23,7 +26,8 @@ object AsOfNative {
       leftTs: String = "ts",
       rightTs: String = "ts",
       allowExactMatches: Boolean = true,
-      toleranceMs: Option[Long] = None
+      toleranceMs: Option[Long] = None,
+      rightOrderBy: Seq[String] = Nil
   ): DataFrame = {
     val lp = GraftBridge.logicalPlan(left)
     // fresh exprIds on the right side: when both inputs share lineage
@@ -39,7 +43,8 @@ object AsOfNative {
       plan.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"column $name not found"))
     val rightValues = rp.output
-      .filterNot(a => keys.contains(a.name) || a.name == rightTs)
+      .filterNot(a => keys.contains(a.name) || a.name == rightTs ||
+        rightOrderBy.contains(a.name))
     // The exec reads timestamps as raw longs and derives the tolerance
     // seconds-divisor from the type — fail fast on anything else rather
     // than silently mis-scaling (e.g. IntegerType seconds).
@@ -64,7 +69,8 @@ object AsOfNative {
       attr(lp, leftTs), attr(rp, rightTs),
       rightValues,
       exact = allowExactMatches,
-      toleranceMs = toleranceMs
+      toleranceMs = toleranceMs,
+      rightOrder = rightOrderBy.map(attr(rp, _))
     )
     // disambiguate clashing output names the same way AsOf does (_r
     // suffix) — select by attribute (exprId-resolved), not by name

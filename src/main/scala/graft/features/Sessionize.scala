@@ -25,19 +25,20 @@ object Sessionize {
   ): DataFrame = {
     val order = (Seq(tsCol) ++ tieBreak).map(col)
     val w = Window.partitionBy(key.map(col): _*).orderBy(order: _*)
-    val prevTs = lag(col(tsCol), 1).over(w)
+    val prevTs = col("__prev_ts")
     val boundary = when(
       prevTs.isNull ||
         col(tsCol).cast("long") - prevTs.cast("long") > gapSeconds,
       1L
     ).otherwise(0L)
-    df.withColumn("__boundary", boundary)
+    df.withColumn("__prev_ts", lag(col(tsCol), 1).over(w))
+      .withColumn("__boundary", boundary)
       .withColumn(
         "session_seq",
         sum(col("__boundary"))
           .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1L
       )
-      .drop("__boundary")
+      .drop("__prev_ts", "__boundary")
       .withColumn(
         "session_id",
         concat_ws("#", key.map(col) :+ col("session_seq").cast("string"): _*)

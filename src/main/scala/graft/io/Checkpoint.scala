@@ -3,11 +3,14 @@ package graft.io
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 import graft.plans.AsOfFilterPushdown
 
@@ -57,6 +60,40 @@ object Checkpoint {
         pmod(hash(key), lit(nBuckets)).isin(remaining: _*))))
   }
 
+  /** Rows per bucket: an aggregate of `n` long slots, one add per row,
+    * over a bucket number in [0, n). It rides along the write in an
+    * observation, so the manifest's row counts need no second job.
+    */
+  final case class BucketCounts(child: Expression, n: Int,
+      mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+      extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+    override def createAggregationBuffer(): Array[Long] = new Array[Long](n)
+    override def update(buf: Array[Long], row: InternalRow): Array[Long] = {
+      buf(child.eval(row).asInstanceOf[Int]) += 1
+      buf
+    }
+    override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < n) { buf(i) += other(i); i += 1 }
+      buf
+    }
+    override def eval(buf: Array[Long]): Any = UnsafeArrayData.fromPrimitiveArray(buf)
+    override def serialize(buf: Array[Long]): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(8 * n)
+      buf.foreach(bb.putLong)
+      bb.array()
+    }
+    override def deserialize(bytes: Array[Byte]): Array[Long] = {
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      Array.fill(n)(bb.getLong)
+    }
+    override def nullable: Boolean = false
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def withNewMutableAggBufferOffset(o: Int): BucketCounts = copy(mutableAggBufferOffset = o)
+    override def withNewInputAggBufferOffset(o: Int): BucketCounts = copy(inputAggBufferOffset = o)
+    override protected def withNewChildInternal(c: Expression): BucketCounts = copy(child = c)
+  }
+
   final case class BucketEntry(bucket: Int, rows: Long, input: String, runId: String)
 
   private def manifestDir(out: String): Path = Paths.get(out, "_manifest")
@@ -94,33 +131,21 @@ object Checkpoint {
     val remaining = kept.withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
 
     val staging = s"$out/_staging_$runId"
-    // one distributed pass over the remaining rows
-    remaining.write
+    // one distributed pass over the remaining rows; the manifest's row
+    // counts ride along in an observation
+    val counts = Observation()
+    remaining
+      .observe(counts, GraftBridge.column(BucketCounts(
+        GraftBridge.expression(col("__bucket")), nBuckets).toAggregateExpression()).as("rows"))
+      .write
       .mode("overwrite")
       .partitionBy("__bucket")
       .parquet(staging)
+    val stagedCounts = counts.get("rows").asInstanceOf[Seq[Long]]
 
     Files.createDirectories(manifestDir(out))
-    val spark = df.sparkSession
     val stagingPath = Paths.get(staging)
     val promoted = scala.collection.mutable.Set[Int]()
-
-    // Per-bucket manifest row counts from ONE job over the staged output
-    // (__bucket is its partition column, so count() is served from parquet
-    // footers) — NOT one read-back job per bucket, which at real bucket
-    // counts means thousands of sequential driver round-trips.
-    val stagedCounts: Map[Int, Long] =
-      if (Files.exists(stagingPath) && {
-          scala.util.Using.resource(Files.list(stagingPath))(
-            _.iterator.asScala.exists(
-              _.getFileName.toString.startsWith("__bucket=")))
-        })
-        spark.read.parquet(staging)
-          .groupBy("__bucket").count()
-          .collect()
-          .map(r => r.getInt(0) -> r.getLong(1))
-          .toMap
-      else Map.empty
 
     def commit(b: Int, rows: Long): Unit = {
       val entry =
@@ -168,7 +193,7 @@ object Checkpoint {
           }
           try {
             Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-            commit(b, stagedCounts.getOrElse(b, 0L))
+            commit(b, stagedCounts(b))
           } catch {
             case _: java.nio.file.FileSystemException
                 if Files.exists(target) =>

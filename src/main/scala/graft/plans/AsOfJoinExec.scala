@@ -13,8 +13,10 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 /** Physical point-in-time join: children are hash-clustered on the join
-  * keys and sorted by (keys, ts); each co-located partition pair is merged
-  * in ONE linear pass, holding at most one buffered right row.
+  * keys and sorted by (keys, ts), the right one then by `rightOrder`; each
+  * co-located partition pair is merged in ONE linear pass, holding at most
+  * one buffered right row — the last eligible one, so of right rows tied
+  * on (keys, ts) the last in `rightOrder` wins.
   *
   * Cost shape vs the union-merge formulation: same single shuffle per
   * side, but each side sorts separately (no combined union sort) and the
@@ -29,7 +31,8 @@ final case class AsOfJoinExec(
     rightTs: Expression,
     rightValues: Seq[Attribute],
     exact: Boolean,
-    toleranceMs: Option[Long] = None
+    toleranceMs: Option[Long] = None,
+    rightOrder: Seq[Expression] = Nil
 ) extends BinaryExecNode {
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
@@ -46,7 +49,7 @@ final case class AsOfJoinExec(
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     (leftKeys :+ leftTs).map(SortOrder(_, org.apache.spark.sql.catalyst.expressions.Ascending)),
-    (rightKeys :+ rightTs).map(SortOrder(_, org.apache.spark.sql.catalyst.expressions.Ascending))
+    (rightKeys ++ (rightTs +: rightOrder)).map(SortOrder(_, org.apache.spark.sql.catalyst.expressions.Ascending))
   )
 
   override def outputPartitioning: Partitioning = left.outputPartitioning

@@ -9,7 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
   *
   * Semantics: for each left row, attach `rightValues` from the LAST right
   * row with equal keys and rightTs <= leftTs (or < when !exact); NULLs
-  * when no such row. Equivalent to [[graft.features.AsOf.joinBackward]]
+  * when no such row. Right rows that tie on (keys, ts) are ordered by
+  * `rightOrder` (ascending) and the last one wins; the tie-break columns
+  * only order the rows and are not among `rightValues`. Equivalent to [[graft.features.AsOf.joinBackward]]
   * but planned as a real sort-merge: each side is shuffled and sorted
   * independently (smaller sorts than the union-merge's combined sort) and
   * merged in one linear pass per partition.
@@ -23,7 +25,8 @@ final case class AsOfJoinPlan(
     rightTs: Expression,
     rightValues: Seq[Attribute],
     exact: Boolean,
-    toleranceMs: Option[Long] = None
+    toleranceMs: Option[Long] = None,
+    rightOrder: Seq[Expression] = Nil
 ) extends BinaryNode {
 
   override def output: Seq[Attribute] =

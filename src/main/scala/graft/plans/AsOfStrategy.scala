@@ -11,7 +11,7 @@ object AsOfStrategy extends SparkStrategy {
     case p: AsOfJoinPlan =>
       AsOfJoinExec(planLater(p.left), planLater(p.right), p.leftKeys,
         p.rightKeys, p.leftTs, p.rightTs, p.rightValues, p.exact,
-        p.toleranceMs) :: Nil
+        p.toleranceMs, p.rightOrder) :: Nil
     case _ => Nil
   }
 }

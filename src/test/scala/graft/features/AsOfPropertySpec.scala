@@ -197,6 +197,42 @@ class AsOfPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("native rightOrderBy tie-break ≡ max_by pre-aggregate: duplicate " +
+    "(key, ts), null ts, exact × tolerance") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, max_by}
+    def ts(rnd: Random, nullEvery: Int): Timestamp =
+      if (rnd.nextInt(nullEvery) == 0) null else new Timestamp(rnd.nextInt(8) * 1000L)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val tolerances = Seq(None, Some(0L), Some(1000L), Some(3000L))
+    for (seed <- 1 to 12) {
+      val rnd = new Random(100 + seed)
+      val nKeys = 1 + rnd.nextInt(3)
+      val l = (0 until 1 + rnd.nextInt(30))
+        .map(i => (s"k${rnd.nextInt(nKeys)}", i, ts(rnd, 6)))
+        .toDF("conv_id", "idx", "ts")
+      // eight timestamps per key: most (key, ts) pairs repeat. The
+      // tie-break is a permutation, so max_by has one answer, and its
+      // order differs from the rows' order.
+      val nRight = rnd.nextInt(40)
+      val tbs = rnd.shuffle((0 until nRight).toVector)
+      val r = (0 until nRight)
+        .map(i => (s"k${rnd.nextInt(nKeys + 1)}", ts(rnd, 8), tbs(i),
+          if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(6))))
+        .toDF("conv_id", "ts", "tb", "obs")
+      val preAgg = r.groupBy("conv_id", "ts").agg(max_by(col("obs"), col("tb")).as("obs"))
+      val tolMs = tolerances(seed % tolerances.size)
+      for (exact <- Seq(true, false)) {
+        val tied = AsOfNative.joinBackward(l, r, Seq("conv_id"),
+          allowExactMatches = exact, toleranceMs = tolMs, rightOrderBy = Seq("tb"))
+        val agg = AsOfNative.joinBackward(l, preAgg, Seq("conv_id"),
+          allowExactMatches = exact, toleranceMs = tolMs)
+        assert(tied.columns.toSeq == agg.columns.toSeq)
+        assert(rows(tied) == rows(agg), s"seed=$seed exact=$exact tol=$tolMs")
+      }
+    }
+  }
+
   test("forward null-ts anchors match nothing (union-merge contract guard)") {
     val l = Seq(("k", 1, Timestamp.valueOf("2026-01-01 00:00:00")),
       ("k", 2, null.asInstanceOf[Timestamp]))

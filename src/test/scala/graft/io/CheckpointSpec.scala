@@ -5,9 +5,8 @@ import java.nio.file.Files
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -141,8 +140,8 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         input = "synthetic:60", runId = "jobs1")
       Thread.sleep(1000) // let the listener bus drain
     } finally spark.sparkContext.removeSparkListener(listener)
-    // staged write + one staged-counts aggregate (+ a possible schema
-    // probe) — NOT one count job per bucket
+    // the staged write, whose observation carries the row counts (+ a
+    // possible schema probe) — NOT one count job per bucket
     assert(jobs.get() <= 5,
       s"expected O(1) jobs for 32 buckets, saw ${jobs.get()}")
     val (rows, _) = Checkpoint.metrics(out)
@@ -243,13 +242,14 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(lowestWindow.nonEmpty)
     assert(lowestWindow.flatMap(w => rowsOut(w.children.head)).sum == invRows)
     // the right input of the as-of: the invalidated buckets' tool turns
+    // enter its lowest operator above the scan stage (its sort)
     val invTools = turns.filter(col("tool").isNotNull &&
       pmod(hash(col("conv_id")), lit(8)).isin(inv.toSeq: _*)).count()
-    val rightAgg = lowest(plans.flatMap(collect(_) { case j: AsOfJoinExec => j.right })) {
-      case a: BaseAggregateExec => a
+    val rightSort = lowest(plans.flatMap(collect(_) { case j: AsOfJoinExec => j.right })) {
+      case s: SortExec => s
     }
-    assert(rightAgg.nonEmpty)
-    assert(rightAgg.flatMap(a => rowsOut(a.children.head)).sum == invTools)
+    assert(rightSort.nonEmpty)
+    assert(rightSort.flatMap(s => rowsOut(s.children.head)).sum == invTools)
   }
 
   test("resume over Bucketed.read plans zero shuffles") {

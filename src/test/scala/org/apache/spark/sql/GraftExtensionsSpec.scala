@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftExtensions, TestSpark}
-import graft.plans.{AsOfFilterPushdown, AsOfStrategy}
+import graft.plans.{AsOfFilterPushdown, AsOfStrategy, StackedWindowFusion}
 
 /** graft's planner pieces reach a session through its extensions, each
   * exactly once, although the test session sees both ways in: the
@@ -22,8 +22,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val batches = state.optimizer.batches
       .filter(_.name.startsWith("Operator Optimization"))
     assert(batches.size == 2, batches.map(_.name))
-    for (b <- batches)
+    for (b <- batches) {
       assert(b.rules.count(_ eq AsOfFilterPushdown) == 1, b.name)
+      assert(b.rules.count(_ eq StackedWindowFusion) == 1, b.name)
+    }
     assert(s.experimental.extraStrategies.isEmpty)
     assert(s.experimental.extraOptimizations.isEmpty)
   }
