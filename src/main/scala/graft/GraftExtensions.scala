@@ -4,18 +4,20 @@ import java.util.{Collections, WeakHashMap}
 
 import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 
-import graft.plans.{AsOfFilterPushdown, AsOfStrategy, StackedWindowFusion}
+import graft.plans.{AsOfFilterPushdown, AsOfStrategy, RemainingBucketsScan, StackedWindowFusion}
 
 /** Registers the native as-of join's planner strategy and pushdown rule,
-  * and the rule that fuses stacked window passes, once, in each session
-  * that loads it: from graft's `META-INF/services`
-  * entry, from `spark.sql.extensions` (which [[GraftSession]] sets, for
-  * classpaths without graft's resources), or both.
+  * the rule that fuses stacked window passes and the rule that prunes a
+  * resume's table buckets, once, in each session that loads it: from
+  * graft's `META-INF/services` entry, from `spark.sql.extensions` (which
+  * [[GraftSession]] sets, for classpaths without graft's resources), or
+  * both.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit =
     if (GraftExtensions.applied.add(ext)) {
       ext.injectPlannerStrategy(_ => AsOfStrategy)
+      ext.injectQueryPostPlannerStrategyRule(_ => RemainingBucketsScan)
       ext.injectOptimizerRule(_ => AsOfFilterPushdown)
       ext.injectOptimizerRule(_ => StackedWindowFusion)
     }

@@ -13,6 +13,7 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.hadoop.fs.file.impl", classOf[io.NioLocalFileSystem].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -17,10 +17,11 @@ import graft.rules.VRule._
   * Plan shape at scale: the gate is a narrow projection fused into the
   * scan; all window features share one (conv_id)-partitioned sort and run
   * in two window passes (lag, LOCF, running count and the session's
-  * previous ts in one, `plans.StackedWindowFusion`; the session running
-  * sum over the boundary flags in the second). Over a plain table the
-  * executed plan has two exchanges, one per as-of side, both on conv_id;
-  * over a table bucketed on conv_id it has none (`PipelinePlanSpec`).
+  * previous ts in one, none of them with a computed argument; the session
+  * running sum over the boundary flags in the second). Over a plain table
+  * the executed plan has two exchanges, one per as-of side, both on
+  * conv_id; over a table bucketed on conv_id it has none
+  * (`PipelinePlanSpec`).
   */
 object Pipeline {
 

@@ -1,6 +1,8 @@
 package graft.features
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, IsNotNull}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -99,9 +101,17 @@ object Windows {
       sum(expr).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     )
 
+  /** Running count of the rows where `pred` holds. `isNotNull(e)` counts `e`
+    * itself, so no flag column is computed below the window.
+    */
   def runningCount(df: DataFrame, w: WindowSpec, pred: Column, as: String)
       : DataFrame =
-    runningSum(df, w, when(pred, 1L).otherwise(0L), as)
+    GraftBridge.logicalPlan(df.select(pred)) match {
+      case Project(Seq(Alias(IsNotNull(e), _)), _) => df.withColumn(as,
+        count(GraftBridge.column(e))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      case _ => runningSum(df, w, when(pred, 1L).otherwise(0L), as)
+    }
 
   /** Time-range rolling window: aggregate over the trailing `seconds`
     * (inclusive of the current row). Ordering is ts-as-epoch-seconds so the

@@ -34,12 +34,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     exchanges (plan-asserted in BucketedSpec);
   *  2. rows inside each file are sorted (conv_id, ts);
   *  3. a re-write of the same table name is atomic (readers see old or
-  *     new, never a mix).
+  *     new, never a mix);
+  *  4. it can tell which of its buckets hold a `Checkpoint` bucket's rows,
+  *     so a resume reads only those ([[tableBuckets]]).
   */
 trait TranscriptLayout {
   def writeTranscript(df: DataFrame, table: String, path: String,
       nBuckets: Int): Unit
   def read(spark: SparkSession, table: String): DataFrame
+
+  /** The buckets, of a table written with `nTable` buckets, that can hold
+    * rows of `Checkpoint` buckets `remaining` of `n`.
+    */
+  def tableBuckets(nTable: Int, n: Int, remaining: Seq[Int]): Seq[Int]
 }
 
 object Bucketed extends TranscriptLayout {
@@ -67,4 +74,16 @@ object Bucketed extends TranscriptLayout {
     */
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
+
+  /** Spark's bucket and `Checkpoint`'s are both `pmod(hash(conv_id), _)`,
+    * the same Murmur3 (seed 42). A row whose hash is h sits in table bucket
+    * pmod(h, nTable) and in checkpoint bucket pmod(h, n), and both are
+    * congruent to h modulo gcd(nTable, n): table bucket t can hold
+    * checkpoint bucket c only when t ≡ c (mod gcd(nTable, n)).
+    */
+  override def tableBuckets(nTable: Int, n: Int, remaining: Seq[Int]): Seq[Int] = {
+    val g = BigInt(nTable).gcd(BigInt(n)).toInt
+    val residues = remaining.map(_ % g).toSet
+    (0 until nTable).filter(t => residues(t % g))
+  }
 }

@@ -5,14 +5,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, Literal, Murmur3Hash, Pmod, Predicate, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-import graft.plans.AsOfFilterPushdown
+import graft.plans.{AsOfFilterPushdown, RemainingBucketsScan}
 
 /** Checkpoint-resumable partitioned batch writes with per-partition
   * lineage + metrics (north rule: "resumable from checkpoint with
@@ -32,32 +33,37 @@ import graft.plans.AsOfFilterPushdown
   *  - a killed run leaves only staging garbage + already-committed
   *    buckets; rerunning converges to the identical final output;
   *  - a resume keeps only the remaining buckets' rows with a
-  *    [[RemainingBuckets]] predicate, which [[AsOfFilterPushdown]] carries
-  *    below `Lineage.observed` and into both inputs of the as-of join, so
-  *    only those rows are shuffled, windowed and joined.
+  *    [[RemainingBuckets]] predicate below the observations its input ends
+  *    with (`Lineage.observed`). [[AsOfFilterPushdown]] carries it into both
+  *    inputs of the as-of join, so only those rows are shuffled, windowed
+  *    and joined, and over a bucketed table [[RemainingBucketsScan]] reads
+  *    only the table buckets that can hold them.
   */
 object Checkpoint {
 
-  /** `pmod(hash(key), n) IN (remaining)`: Checkpoint's resume predicate,
-    * evaluated by its child. It is a node of its own so that
-    * [[AsOfFilterPushdown]] can tell it from any other filter: this one
-    * alone may move below a `CollectMetrics` node, so that an observation
-    * counts the rows a resume writes. A user's filter over `observe(...)`
-    * keeps Spark's meaning.
+  /** `pmod(hash(child), n) IN (remaining)`: Checkpoint's resume predicate
+    * over its key. It is a node of its own so that [[RemainingBucketsScan]]
+    * can read which buckets it keeps, whatever Spark makes of the
+    * arithmetic. With no bucket remaining it is constant `false`, so Spark
+    * folds the plan below it to an empty relation that reads nothing.
     */
-  final case class RemainingBuckets(child: Expression)
+  final case class RemainingBuckets(child: Expression, n: Int, remaining: Seq[Int])
       extends UnaryExpression with Predicate {
-    override def eval(input: InternalRow): Any = child.eval(input)
+    @transient private lazy val test: Expression =
+      if (remaining.isEmpty) Literal.FalseLiteral
+      else In(Pmod(new Murmur3Hash(Seq(child)), Literal(n)), remaining.map(Literal(_)))
+    override def foldable: Boolean = test.foldable
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = test.eval(input)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      child.genCode(ctx)
+      test.genCode(ctx)
     override protected def withNewChildInternal(c: Expression): RemainingBuckets =
       copy(child = c)
   }
 
   object RemainingBuckets {
     def apply(key: Column, nBuckets: Int, remaining: Seq[Int]): Column =
-      GraftBridge.column(RemainingBuckets(GraftBridge.expression(
-        pmod(hash(key), lit(nBuckets)).isin(remaining: _*))))
+      GraftBridge.column(RemainingBuckets(GraftBridge.expression(key), nBuckets, remaining))
   }
 
   /** Rows per bucket: an aggregate of `n` long slots, one add per row,
@@ -122,11 +128,12 @@ object Checkpoint {
       runId: String
   ): Set[Int] = {
     val done = committedBuckets(out)
-    if (done.size == nBuckets) return Set.empty
-    // a full write keeps every row and builds no predicate
+    // a full write keeps every row and builds no predicate; over a fully
+    // committed output the predicate is false and the write reads nothing,
+    // but still fills the input's observations (with zero counts)
     val kept =
       if (done.isEmpty) df
-      else df.filter(RemainingBuckets(col(keyCol), nBuckets,
+      else underObservations(df, RemainingBuckets(col(keyCol), nBuckets,
         (0 until nBuckets).filterNot(done)))
     val remaining = kept.withColumn("__bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
 
@@ -215,6 +222,18 @@ object Checkpoint {
     }
     deleteRecursively(stagingPath)
     promoted.toSet
+  }
+
+  /** `df` filtered on `cond` below the observations it ends with, so that
+    * they count only the rows that pass.
+    */
+  private def underObservations(df: DataFrame, cond: Column): DataFrame = {
+    val Filter(resolved, plan) = GraftBridge.logicalPlan(df.filter(cond))
+    def place(p: LogicalPlan): LogicalPlan = p match {
+      case m: CollectMetrics => m.withNewChildren(Seq(place(m.child)))
+      case _ => Filter(resolved, p)
+    }
+    GraftBridge.ofRows(df, place(plan))
   }
 
   /** Read back the committed dataset (all buckets). */

@@ -36,13 +36,10 @@ object FeatureBackfillJob {
     val runId =
       if (args.length > 3) args(3)
       else s"run_${java.util.UUID.randomUUID().toString.take(8)}"
-    // over a fully committed output no action would fill the observation
-    val done = Checkpoint.committedBuckets(outDir).size == nBuckets
-    val (promoted, metrics) = if (done) (Set.empty[Int], Map.empty[String, Any]) else {
-      val (features, obs) = Lineage.observed(Pipeline.features(spark, sfDir), "ts")
-      (Checkpoint.write(features, "conv_id", outDir, nBuckets, sfDir, runId), obs.get)
-    }
+    val (features, obs) = Lineage.observed(Pipeline.features(spark, sfDir), "ts")
+    val promoted = Checkpoint.write(features, "conv_id", outDir, nBuckets, sfDir, runId)
+    val metrics = obs.get
     val (bucketRows, skew) = Checkpoint.metrics(outDir)
-    s"""{"run_id":"$runId","input":"$sfDir","out":"$outDir","buckets_promoted":${promoted.size},"buckets_total":${bucketRows.size},"rows":${bucketRows.values.sum},"observed_rows":${metrics.getOrElse("rows", 0)},"null_ts":${metrics.getOrElse("null_ts", 0)},"bucket_skew":${f"$skew%.3f"}}"""
+    s"""{"run_id":"$runId","input":"$sfDir","out":"$outDir","buckets_promoted":${promoted.size},"buckets_total":${bucketRows.size},"rows":${bucketRows.values.sum},"observed_rows":${metrics("rows")},"null_ts":${metrics("null_ts")},"bucket_skew":${f"$skew%.3f"}}"""
   }
 }

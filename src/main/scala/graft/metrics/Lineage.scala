@@ -18,16 +18,17 @@ object Lineage {
     * }}}
     * The observation counts the rows of `df`, whatever filters the action
     * puts on top of it — with one exception: when `df2` goes through
-    * `Checkpoint.write` and buckets are already committed, its resume
-    * predicate moves below the observation, which then counts only the
-    * rows of the buckets this write promotes.
+    * `Checkpoint.write` and buckets are already committed, the write puts
+    * its resume predicate below the observation, which then counts only
+    * the rows of the buckets this write promotes (none, and zero counts,
+    * over a fully committed output).
     */
   def observed(df: DataFrame, tsCol: String): (DataFrame, Observation) = {
     val obs = Observation()
     val out = df.observe(
       obs,
       count(lit(1)).as("rows"),
-      sum(when(col(tsCol).isNull, 1L).otherwise(0L)).as("null_ts"),
+      count(when(col(tsCol).isNull, 1L)).as("null_ts"),
       min(col(tsCol)).as("min_ts"),
       max(col(tsCol)).as("max_ts")
     )

@@ -1,18 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeMap, Expression, PredicateHelper}
-import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-import graft.io.Checkpoint.RemainingBuckets
-
-/** Custom optimizer rule: push predicates THROUGH the native as-of join and
-  * Checkpoint's resume predicate through an observation. Catalyst's stock
-  * filter pushdown knows neither our node nor how to cross a
-  * `CollectMetrics`, so without this a `features.filter(anchorPred)` scans
-  * and merges every anchor row before discarding — at 10^12 turns that is
-  * the difference between reading a partition and reading the table.
+/** Custom optimizer rule: push predicates THROUGH the native as-of join.
+  * Catalyst's stock filter pushdown does not know our node, so without
+  * this a `features.filter(anchorPred)` scans and merges every anchor row
+  * before discarding — at 10^12 turns that is the difference between
+  * reading a partition and reading the table.
   *
   *  - A deterministic predicate over the left input moves into the left
   *    input. Safe because each anchor row's match depends only on the
@@ -25,9 +22,7 @@ import graft.io.Checkpoint.RemainingBuckets
   *    value (not floating point, not a collated string), where a predicate
   *    cannot tell two equal keys apart. Any other right-side predicate is
   *    NOT pushable (dropping observations changes which one is "latest").
-  *  - A [[RemainingBuckets]] predicate moves below a `CollectMetrics`
-  *    (`Lineage.observed`), so that a resume's observation counts the rows
-  *    it writes. Any other filter over an observation stays above it.
+  *    Checkpoint's resume predicate is such a key-only predicate.
   *
   * [[graft.GraftExtensions]] puts the rule in Spark's fixed-point
   * operator-optimization batches, next to `PushDownPredicates`, so whatever
@@ -36,14 +31,6 @@ import graft.io.Checkpoint.RemainingBuckets
 object AsOfFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
-      case f @ Filter(cond, m: CollectMetrics) =>
-        val (marked, kept) = splitConjunctivePredicates(cond)
-          .partition(_.isInstanceOf[RemainingBuckets])
-        if (marked.isEmpty) f
-        else {
-          val below = m.withNewChildren(Seq(Filter(marked.reduce(And), m.child)))
-          kept.reduceOption(And).map(Filter(_, below)).getOrElse(below)
-        }
       case f @ Filter(cond, j: AsOfJoinPlan) =>
         val (pushable, kept) = splitConjunctivePredicates(cond)
           .partition(p =>

@@ -7,12 +7,12 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW
 
 /** Custom optimizer rule: lets stacked window features over one window
   * spec run as one pass. A window function whose argument is an expression
-  * (`sum(CASE WHEN tool IS NOT NULL THEN 1 ELSE 0 END)`, as
-  * `Windows.runningCount` writes it) reads an alias that Spark computes in
-  * a `Project` just below its `Window`. Stacked on an earlier window of the
-  * same spec, that gives `Window – Project – Window`, which Spark's
-  * `CollapseWindow` cannot merge: the upper window reads a column the
-  * lower window's input lacks.
+  * (`last(CASE WHEN tool IS NOT NULL AND ts IS NOT NULL THEN struct(ts,
+  * tool) END)`, as `Windows.locf` writes it) reads an alias that Spark
+  * computes in a `Project` just below its `Window`. Stacked on an earlier
+  * window of the same spec, that gives `Window – Project – Window`, which
+  * Spark's `CollapseWindow` cannot merge: the upper window reads a column
+  * the lower window's input lacks.
   *
   * When every such column is a deterministic alias that reads only the
   * lower window's input, this rule computes those aliases below the lower

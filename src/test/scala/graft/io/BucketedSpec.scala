@@ -1,9 +1,12 @@
 package graft.io
 
 import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -101,5 +104,21 @@ class BucketedSpec extends AnyFunSuite {
         (if (r.isNullAt(2)) None else Some(r.getTimestamp(2).getTime)))
       .toMap
     assert(key(lagged) == key(plain))
+  }
+
+  test("tableBuckets: a key's table bucket is among those it gives for the " +
+    "key's checkpoint bucket") {
+    // Murmur3 (seed 42) of conversation ids, as Spark bucketing and
+    // Checkpoint hash them, and the edges of the int range
+    val hashes = Seq(Int.MinValue, -97, -1, 0, 1, Int.MaxValue) ++ (0 until 200).map(i =>
+      Murmur3HashFunction.hash(UTF8String.fromString(s"c$i"), StringType, 42L).toInt)
+    def pmod(h: Int, m: Int) = ((h % m) + m) % m
+    for (nTable <- 1 to 12; n <- 1 to 12; h <- hashes)
+      assert(Bucketed.tableBuckets(nTable, n, Seq(pmod(h, n))).contains(pmod(h, nTable)),
+        s"N=$nTable n=$n h=$h")
+    // no more than gcd(N, n) allows: N / gcd table buckets per checkpoint bucket
+    assert(Bucketed.tableBuckets(8, 32, 0 until 32 by 4) == Seq(0, 4))
+    assert(Bucketed.tableBuckets(8, 4, Seq(1)) == Seq(1, 5))
+    assert(Bucketed.tableBuckets(3, 8, Seq(5)) == Seq(0, 1, 2))
   }
 }

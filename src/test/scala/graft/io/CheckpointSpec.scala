@@ -5,13 +5,15 @@ import java.nio.file.Files
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, QueryExecution, SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.{Pipeline, TestSpark}
 import graft.metrics.Lineage
@@ -22,9 +24,11 @@ import graft.schema.TranscriptGen
   * (north-rule resumability), and manifests must carry per-partition
   * lineage + row counts.
   */
-class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeLimits {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  // interrupts a test blocked on an observation that no action fills
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def tmp(): String =
     GraftBridge.tempDir("graft_ckpt").toString
@@ -158,9 +162,10 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   /** `FeatureBackfillJob`'s body over `turns`: returns the observation. */
-  private def backfill(turns: DataFrame, out: String, runId: String): Map[String, Any] = {
+  private def backfill(turns: DataFrame, out: String, runId: String,
+      nBuckets: Int = 8): Map[String, Any] = {
     val (features, obs) = Lineage.observed(Pipeline.featuresFromTurns(turns), "ts")
-    Checkpoint.write(features, "conv_id", out, 8, "spec", runId)
+    Checkpoint.write(features, "conv_id", out, nBuckets, "spec", runId)
     obs.get
   }
 
@@ -236,6 +241,9 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val inv = Set(0, 3, 6)
     Checkpoint.invalidate(out, inv)
     val plans = captured(backfill(turns, out, "w2"))
+    // a table without buckets has no bucket set to narrow
+    val scans = plans.flatMap(collect(_) { case s: FileSourceScanExec => s })
+    assert(scans.nonEmpty && scans.forall(_.optionalBucketSet.isEmpty))
     val (rows, _) = Checkpoint.metrics(out)
     val invRows = inv.toSeq.map(rows).sum
     val lowestWindow = lowest(plans) { case w: WindowExec => w }
@@ -252,13 +260,21 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rightSort.flatMap(s => rowsOut(s.children.head)).sum == invTools)
   }
 
+  /** The file scans of the plans that run the as-of join. */
+  private def flagshipScans(plans: Seq[SparkPlan]): Seq[FileSourceScanExec] =
+    plans.filter(p => collect(p) { case j: AsOfJoinExec => j }.nonEmpty)
+      .flatMap(collect(_) { case s: FileSourceScanExec => s })
+
+  private def bucketSet(s: FileSourceScanExec): Option[Set[Int]] =
+    s.optionalBucketSet.map(_.iterator.toSet)
+
   test("resume over Bucketed.read plans zero shuffles") {
     val table = "t_ckpt_resume"
     Bucketed.writeTranscript(TranscriptGen.generateDF(spark, 60), table, tmp(), nBuckets = 8)
     val clean = tmp()
     backfill(Bucketed.read(spark, table), clean, "b0")
     val out = tmp()
-    backfill(Bucketed.read(spark, table), out, "b1")
+    val full = captured(backfill(Bucketed.read(spark, table), out, "b1"))
     Checkpoint.invalidate(out, Set(1, 6))
     val plans = captured(backfill(Bucketed.read(spark, table), out, "b2"))
       .filter(p => collect(p) { case j: AsOfJoinExec => j }.nonEmpty)
@@ -266,6 +282,50 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val exchanges = plans.flatMap(collect(_) { case e: ShuffleExchangeExec => e })
     assert(exchanges.isEmpty, s"resume shuffles:\n${plans.mkString("\n")}")
     assert(sorted(out) == sorted(clean))
+    // 8 table buckets, 8 checkpoint buckets: gcd 8, so checkpoint bucket c
+    // is table bucket c, on both sides of the as-of join
+    assert(flagshipScans(plans).map(bucketSet) == Seq(Some(Set(1, 6)), Some(Set(1, 6))))
+    // a full write prunes nothing
+    assert(flagshipScans(full).map(bucketSet) == Seq(None, None))
+  }
+
+  test("resume of checkpoint buckets {0, 4, …, 28} of 32 over 8 table " +
+    "buckets reads table buckets 0 and 4") {
+    val table = "t_ckpt_resume_32"
+    Bucketed.writeTranscript(TranscriptGen.generateDF(spark, 80), table, tmp(), nBuckets = 8)
+    val clean = tmp()
+    backfill(Bucketed.read(spark, table), clean, "g0", nBuckets = 32)
+    val out = tmp()
+    backfill(Bucketed.read(spark, table), out, "g1", nBuckets = 32)
+    Checkpoint.invalidate(out, (0 until 32 by 4).toSet)
+    val plans = captured(backfill(Bucketed.read(spark, table), out, "g2", nBuckets = 32))
+    val scans = flagshipScans(plans)
+    // gcd(8, 32) = 8, and every invalidated bucket is ≡ 0 or 4 (mod 8)
+    assert(scans.map(bucketSet) == Seq(Some(Set(0, 4)), Some(Set(0, 4))))
+    assert(scans.map(_.metadata.get("SelectedBucketsCount")) ==
+      Seq(Some("2 out of 8"), Some("2 out of 8")))
+    assert(plans.flatMap(collect(_) { case e: ShuffleExchangeExec => e }).isEmpty)
+    assert(sorted(out) == sorted(clean))
+    assert(Checkpoint.metrics(out)._1 == Checkpoint.metrics(clean)._1)
+  }
+
+  test("a write over a fully committed output reads nothing and fills its " +
+    "input's observation with zero counts") {
+    val dir = tmp()
+    TranscriptGen.generateDF(spark, 30).write.mode("overwrite").parquet(dir)
+    val out = tmp()
+    backfill(spark.read.parquet(dir), out, "z1")
+    val before = sorted(out)
+    failAfter(2.minutes) {
+      val plans = captured {
+        assert(backfill(spark.read.parquet(dir), out, "z2") ==
+          Map("rows" -> 0L, "null_ts" -> 0L, "min_ts" -> null, "max_ts" -> null))
+      }
+      assert(plans.nonEmpty)
+      assert(plans.flatMap(collect(_) { case s: FileSourceScanExec => s }).isEmpty)
+      assert(plans.flatMap(collect(_) { case s: LocalTableScanExec => s }).nonEmpty)
+    }
+    assert(sorted(out) == before)
   }
 
   test("partition histogram reports skew") {

@@ -15,9 +15,10 @@ import graft.metrics.Lineage
 import graft.plans.AsOfJoinPlan
 
 /** Seeded differential property for the resume pushdown: over random
-  * transcripts and random sets of committed buckets, a resume must write
-  * what a clean write writes, and the predicates `AsOfFilterPushdown`
-  * copies into the as-of join's right input must change no match:
+  * transcripts, plain or bucketed, and random sets of committed buckets, a
+  * resume must write what a clean write writes, and the predicates
+  * `AsOfFilterPushdown` copies into the as-of join's right input must
+  * change no match:
   *
   *   clean write ≡ write, drop the uncommitted buckets, resume
   *   join.filter(keyPred ∧ tsPred) ≡ (join, materialized).filter(...)
@@ -30,8 +31,8 @@ class ResumePropertySpec extends AnyFunSuite {
 
   private val Buckets = 8
 
-  /** Random turns: few conversations, colliding timestamps, sparse tools,
-    * empty and over-long texts (rejected by the gate).
+  /** Random turns of few conversations, a few rows or none a quarter of
+    * the time.
     */
   private def randomTurns(seed: Int): DataFrame = {
     val rnd = new Random(seed)
@@ -40,6 +41,13 @@ class ResumePropertySpec extends AnyFunSuite {
       case 0 => rnd.nextInt(5) // a few rows, or none
       case _ => 5 + rnd.nextInt(120)
     }
+    turns(rnd, nConvs, n)
+  }
+
+  /** `n` turns over `nConvs` conversations: colliding timestamps, sparse
+    * tools, empty and over-long texts (rejected by the gate).
+    */
+  private def turns(rnd: Random, nConvs: Int, n: Int): DataFrame =
     (0 until n).map { i =>
       val text = rnd.nextInt(8) match {
         case 0 => ""
@@ -50,38 +58,67 @@ class ResumePropertySpec extends AnyFunSuite {
       (s"c${rnd.nextInt(nConvs)}", i, "user", text, tool,
         new Timestamp(1700000000000L + rnd.nextInt(40) * 600000L))
     }.toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-  }
 
-  /** The observation is filled only if the write ran an action. */
-  private def backfill(turns: DataFrame, out: String, runId: String): Observation = {
+  private def backfill(turns: DataFrame, out: String, runId: String,
+      nBuckets: Int = Buckets): Observation = {
     val (features, obs) = Lineage.observed(Pipeline.featuresFromTurns(turns), "ts")
-    Checkpoint.write(features, "conv_id", out, Buckets, "spec", runId)
+    Checkpoint.write(features, "conv_id", out, nBuckets, "spec", runId)
     obs
   }
 
+  /** The output's rows; `Checkpoint.read` cannot read an output of none. */
   private def rows(out: String) =
-    Checkpoint.read(spark, out).orderBy("conv_id", "turn_idx").collect().toSeq
+    if (Checkpoint.metrics(out)._1.values.sum == 0) Seq.empty
+    else Checkpoint.read(spark, out).orderBy("conv_id", "turn_idx").collect().toSeq
+
+  /** Clean write, then a write of which the `committed` buckets are kept
+    * and a resume: the resume writes what the clean write wrote, and its
+    * observation counts the rows it writes.
+    */
+  private def assertResumeIsClean(turns: DataFrame, dir: String, nBuckets: Int,
+      committed: Set[Int], clue: String): Unit = {
+    val clean = s"$dir/clean"
+    backfill(turns, clean, "clean", nBuckets)
+    val out = s"$dir/resumed"
+    backfill(turns, out, "first", nBuckets)
+    Checkpoint.invalidate(out, (0 until nBuckets).toSet -- committed)
+    val obs = backfill(turns, out, "resume", nBuckets)
+    assert(rows(out) == rows(clean), s"$clue committed=$committed")
+    val manifest = Checkpoint.metrics(out)._1
+    assert(manifest == Checkpoint.metrics(clean)._1, clue)
+    val written = manifest.collect { case (b, r) if !committed(b) => r }.sum
+    assert(obs.get("rows") == written, s"$clue committed=$committed")
+  }
 
   test("resume ≡ clean write: random transcripts × random committed buckets") {
     for (seed <- 1 to 6) {
-      val rnd = new Random(1000 + seed)
       val dir = GraftBridge.tempDir("graft_resume_prop").toString
       randomTurns(seed).write.mode("overwrite").parquet(dir)
-      val turns = spark.read.parquet(dir)
-      val clean = s"$dir/clean"
-      backfill(turns, clean, "clean")
+      val rnd = new Random(1000 + seed)
       val committed = (0 until Buckets).filter(_ => rnd.nextBoolean()).toSet
-      val out = s"$dir/resumed"
-      backfill(turns, out, "first")
-      Checkpoint.invalidate(out, (0 until Buckets).toSet -- committed)
-      val obs = backfill(turns, out, "resume")
-      assert(rows(out) == rows(clean), s"seed=$seed committed=$committed")
-      val manifest = Checkpoint.metrics(out)._1
-      assert(manifest == Checkpoint.metrics(clean)._1, s"seed=$seed")
-      if (committed.size < Buckets) {
-        val written = manifest.collect { case (b, r) if !committed(b) => r }.sum
-        assert(obs.get("rows") == written, s"seed=$seed committed=$committed")
-      }
+      assertResumeIsClean(spark.read.parquet(dir), dir, Buckets, committed, s"seed=$seed")
+    }
+  }
+
+  test("resume over Bucketed.read ≡ clean write: N table buckets × n " +
+    "checkpoint buckets, coprime, dividing and equal") {
+    // (N, n): coprime; N divides n; n divides N; N = n
+    val layouts = Seq((3, 8), (5, 4), (7, 6), (4, 8), (2, 16), (8, 4), (16, 8),
+      (6, 3), (8, 8), (4, 4))
+    for (((nTable, n), i) <- layouts.zipWithIndex) {
+      val seed = 100 + i
+      val rnd = new Random(seed)
+      val dir = GraftBridge.tempDir("graft_resume_bucketed").toString
+      val table = s"t_resume_prop_$i"
+      // enough conversations to fill most table buckets, and up to a
+      // quarter of the checkpoint buckets, at least one, left to resume, so
+      // that a table bucket missed by the scan loses rows
+      Bucketed.writeTranscript(turns(rnd, 20 + rnd.nextInt(40), 60 + rnd.nextInt(200)),
+        table, s"$dir/table", nTable)
+      val committed = rnd.shuffle((0 until n).toList)
+        .drop(1 + rnd.nextInt(math.max(1, n / 4))).toSet
+      assertResumeIsClean(Bucketed.read(spark, table), dir, n, committed,
+        s"seed=$seed N=$nTable n=$n")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
@@ -33,28 +33,37 @@ class StackedWindowFusionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .exists(_.child.output.exists(_.name.startsWith("_w")))
   }
 
-  /** The flagship's window block (`Pipeline.featuresFromTurns`). */
-  private def flagshipWindows(s: SparkSession): DataFrame = {
+  /** The flagship's window block (`Pipeline.featuresFromTurns`), counting
+    * the rows where `counted` holds.
+    */
+  private def flagshipWindows(s: SparkSession, counted: Column): DataFrame = {
     val w = Windows.turnWindow
     Sessionize(
       Windows.runningCount(
         Windows.locf(
           Windows.withLag(TranscriptGen.generateDF(s, 40), w, "text", 1, as = "prev_text"),
           w, "tool", as = "tool_state"),
-        w, col("tool").isNotNull, as = "n_tool_calls"),
+        w, counted, as = "n_tool_calls"),
       Seq("conv_id"), "ts", gapSeconds = 1800L, tieBreak = Seq("turn_idx"))
   }
 
   test("stacked withLag → locf → runningCount → Sessionize plan two window " +
     "passes, with the rows of the unfused plan") {
-    val fused = flagshipWindows(spark)
-    assert(windowPasses(fused) == 2)
     val unfusedSession = spark.newSession()
     unfusedSession.conf.set("spark.sql.optimizer.excludedRules", StackedWindowFusion.ruleName)
-    val unfused = flagshipWindows(unfusedSession)
-    assert(windowPasses(unfused) == 3)
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // a count whose flag is an expression (`CASE WHEN … THEN 1 ELSE 0 END`)
+    val long = length(col("text")) > 20
+    val fused = flagshipWindows(spark, long)
+    assert(windowPasses(fused) == 2)
+    val unfused = flagshipWindows(unfusedSession, long)
+    assert(windowPasses(unfused) == 3)
     assert(rows(fused) == rows(unfused))
+    // the flagship's own count, `isNotNull(tool)`, counts the column: no
+    // flag, so two passes without the rule too
+    val flagship = flagshipWindows(unfusedSession, col("tool").isNotNull)
+    assert(windowPasses(flagship) == 2)
+    assert(rows(flagship) == rows(flagshipWindows(spark, col("tool").isNotNull)))
   }
 
   test("a non-deterministic alias is not moved") {

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftExtensions, TestSpark}
-import graft.plans.{AsOfFilterPushdown, AsOfStrategy, StackedWindowFusion}
+import graft.plans.{AsOfFilterPushdown, AsOfStrategy, RemainingBucketsScan, StackedWindowFusion}
 
 /** graft's planner pieces reach a session through its extensions, each
   * exactly once, although the test session sees both ways in: the
@@ -19,6 +19,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
   private def assertRegisteredOnce(s: classic.SparkSession): Unit = {
     val state = s.sessionState
     assert(state.planner.strategies.count(_ eq AsOfStrategy) == 1)
+    assert(state.adaptiveRulesHolder.queryPostPlannerStrategyRules
+      .count(_ eq RemainingBucketsScan) == 1)
     val batches = state.optimizer.batches
       .filter(_.name.startsWith("Operator Optimization"))
     assert(batches.size == 2, batches.map(_.name))
