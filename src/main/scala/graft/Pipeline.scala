@@ -21,7 +21,8 @@ import graft.rules.VRule._
   * running sum over the boundary flags in the second). Over a plain table
   * the executed plan has two exchanges, one per as-of side, both on
   * conv_id; over a table bucketed on conv_id it has none
-  * (`PipelinePlanSpec`).
+  * (`PipelinePlanSpec`). `features`, over the transcript derived from
+  * `events`, has the same two: the derivation's window is on conv_id.
   */
 object Pipeline {
 
@@ -39,14 +40,7 @@ object Pipeline {
   )
 
   def features(spark: SparkSession, dir: String): DataFrame =
-    // the gate branch and the tool-observation branch BOTH consume the
-    // derived transcript (events scan + user_id window); materialize the
-    // derivation once per evaluation (lazy localCheckpoint, fresh per
-    // invocation). Deliberately NOT inside featuresFromTurns: over a
-    // bucketed table a checkpoint would erase the conv_id bucketing that
-    // elides the downstream exchanges (pipeline_bucketed's whole point),
-    // and there the second read is a cheap bucketed scan anyway.
-    featuresFromTurns(Tables.transcript(spark, dir).localCheckpoint(false))
+    featuresFromTurns(Tables.transcript(spark, dir))
 
   /** Same pipeline over an already-materialized transcript table. */
   def featuresFromTurns(turns: DataFrame): DataFrame = {

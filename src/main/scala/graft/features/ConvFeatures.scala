@@ -583,8 +583,8 @@ object ConvFeatures {
     }
     // five signal branches each re-derive the turns input (for a derived
     // transcript view that is a scan + window per branch); materialize it
-    // once (lazy localCheckpoint — computed inside the evaluating job,
-    // fresh per invocation) so the branches share one pass
+    // once (lazy localCheckpoint, fresh per invocation) so the branches
+    // share one pass: fewer exchanges without it, but slower
     val turnsOnce = turns.localCheckpoint(false)
     val g = groundingScore(turnsOnce).groupBy(col("conv_id")).agg(
       sum(col("grounded_words")).as("grounded_words"),

@@ -33,38 +33,41 @@ object LocfScalable {
       as: String = ""
   ): DataFrame = {
     val out = if (as.isEmpty) s"${srcCol}_locf" else as
-    val chunk = floor(col(tsCol).cast("long") / chunkSeconds).as("__chunk")
-    val df1 = df.withColumn("__chunk", chunk)
+    val keyChunk = key :+ "__chunk"
+    val df1 = df.withColumn("__chunk", floor(col(tsCol).cast("long") / chunkSeconds))
+      .withColumn("__kc", Skew.packed(keyChunk))
 
     // phase 1: LOCF within (key, chunk)
     val w1 = Window
-      .partitionBy((key :+ "__chunk").map(col): _*)
+      .partitionBy(col("__kc"))
       .orderBy(col(tsCol), col(tieCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val partial = df1.withColumn("__partial",
       last(col(srcCol), ignoreNulls = true).over(w1))
 
     // phase 2: per-chunk last observation, then carry-in per chunk =
-    // LOCF over the chunk sequence, shifted one chunk back
-    val chunkLast = df1
+    // LOCF over the chunk sequence, shifted one chunk back (none for or
+    // from a row whose key or chunk is null)
+    val complete = df1.filter(keyChunk.map(col(_).isNotNull).reduce(_ && _))
+    val chunkLast = complete
       .filter(col(srcCol).isNotNull)
-      .groupBy((key :+ "__chunk").map(col): _*)
+      .groupBy(col("__kc"))
       .agg(max_by(col(srcCol), struct(col(tsCol), col(tieCol)))
         .as("__chunk_last"))
-    val allChunks = df1.select((key :+ "__chunk").map(col): _*).distinct()
+    val allChunks = complete.select(col("__kc")).distinct()
     val wc = Window
-      .partitionBy(key.map(col): _*)
-      .orderBy(col("__chunk"))
+      .partitionBy(key.map(col("__kc").getField): _*)
+      .orderBy(col("__kc").getField("__chunk"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val carry = allChunks
-      .join(chunkLast, key :+ "__chunk", "left")
+      .join(chunkLast, Seq("__kc"), "left")
       .withColumn("__carry_in",
         last(col("__chunk_last"), ignoreNulls = true).over(wc))
-      .select((key :+ "__chunk").map(col) :+ col("__carry_in"): _*)
+      .select(col("__kc"), col("__carry_in"))
 
     partial
-      .join(carry, key :+ "__chunk", "left")
+      .join(carry, Seq("__kc"), "left")
       .withColumn(out, coalesce(col("__partial"), col("__carry_in")))
-      .drop("__chunk", "__partial", "__carry_in")
+      .drop("__chunk", "__kc", "__partial", "__carry_in")
   }
 }

@@ -27,6 +27,28 @@ object Skew {
     case _             => false
   }
 
+  /** `df` with `__salt` in [0, salts): a hash of the input partition id
+    * and the hashable row content. Not monotonically_increasing_id(),
+    * whose ids shift when a stage is recomputed under another
+    * partitioning; not content alone, which puts a mega-key of identical
+    * rows (mass-duplicated boilerplate) on one salt. Deterministic for a
+    * fixed input layout: a retried task re-reads its partition. Columns
+    * holding a MapType at any depth are left out (hash() rejects them).
+    */
+  private def salted(df: DataFrame, salts: Int): DataFrame = {
+    val hashable =
+      df.schema.fields.toSeq.filterNot(f => containsMap(f.dataType)).map(f => col(f.name))
+    df.withColumn("__salt", pmod(hash(spark_partition_id() +: hashable: _*), lit(salts)))
+  }
+
+  /** `cols` packed into one struct column. An operator clustered on the
+    * columns themselves accepts an input hash-partitioned on the key
+    * alone and plans no exchange, which leaves a hot key in one task;
+    * clustered on the struct it shuffles on the salt or chunk too.
+    */
+  private[features] def packed(cols: Seq[String]): Column =
+    struct(cols.map(col): _*)
+
   /** Two-phase salted aggregation. `partials` aggregate within each
     * (key, salt) group; `merges` recombine the partial columns (by name)
     * per key — e.g. partial `count(*) as n_part` merges as
@@ -40,31 +62,12 @@ object Skew {
       merges: Seq[(Column, String)]
   ): DataFrame = {
     require(partials.nonEmpty && merges.nonEmpty)
-    // Salt from (input partition id, hashable row content) — NOT
-    // monotonically_increasing_id(): mid-ids shift when a stage is
-    // recomputed with different partitioning, which would make lineage
-    // nondeterministic across retries. Content alone is not enough
-    // either: a mega-key of byte-IDENTICAL rows (mass-duplicated
-    // boilerplate) would collapse onto one salt and keep the hot
-    // reducer — mixing in spark_partition_id() spreads duplicates
-    // across as many salts as input partitions while staying
-    // deterministic for a fixed input layout (task retries re-read the
-    // same partition). Columns containing a MapType at ANY nesting level
-    // are excluded (hash() rejects maps at any depth in Spark 3+ — a
-    // struct<m:map<…>> fails analysis just like a top-level map).
-    val hashable = df.schema.fields
-      .filterNot(f => containsMap(f.dataType))
-      .map(f => col(f.name))
-      .toSeq
-    val salted = df.withColumn(
-      "__salt",
-      pmod(hash(spark_partition_id() +: hashable: _*), lit(salts)))
-    val phase1 = salted
-      .groupBy((keys :+ "__salt").map(col): _*)
+    val phase1 = salted(df, salts)
+      .groupBy(packed(keys :+ "__salt").as("__ks"))
       .agg(partials.head._1.as(partials.head._2),
         partials.tail.map { case (c, n) => c.as(n) }: _*)
     phase1
-      .groupBy(keys.map(col): _*)
+      .groupBy(keys.map(k => col("__ks").getField(k).as(k)): _*)
       .agg(merges.head._1.as(merges.head._2),
         merges.tail.map { case (c, n) => c.as(n) }: _*)
   }
@@ -102,10 +105,9 @@ object Skew {
     * `row_number().over(partitionBy(key))` serializes a mega-key (a
     * stopword's postings, a dominant language) into a single sort — the
     * same failure mode saltedAgg exists for. Here each key is spread
-    * over `salts` sub-groups (same deterministic salt recipe as
-    * [[saltedAgg]]), the top-k of each sub-group survives phase 1, and
-    * phase 2 re-ranks the ≤ salts·k survivors per key — a bounded
-    * partition no matter how hot the key.
+    * over `salts` sub-groups (the salt of [[saltedAgg]]), the top-k of
+    * each sub-group survives phase 1, and phase 2 re-ranks the ≤ salts·k
+    * survivors per key — a bounded partition no matter how hot the key.
     *
     * Correctness: any row in a key's global top-k is necessarily in its
     * sub-group's top-k (row_number is monotone under a fixed order), so
@@ -128,17 +130,10 @@ object Skew {
     require(order.nonEmpty,
       "need a total order (with tiebreaker) within each key")
     require(k > 0 && salts > 0, "k and salts must be positive")
-    val hashable = df.schema.fields
-      .filterNot(f => containsMap(f.dataType))
-      .map(f => col(f.name))
-      .toSeq
-    val salted = df.withColumn(
-      "__salt",
-      pmod(hash(spark_partition_id() +: hashable: _*), lit(salts)))
     val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy((keys :+ "__salt").map(col): _*)
+      .partitionBy(packed(keys :+ "__salt"))
       .orderBy(order: _*)
-    val phase1 = salted
+    val phase1 = salted(df, salts)
       .withColumn("__r1", row_number().over(w1))
       .filter(col("__r1") <= k)
       .drop("__salt", "__r1")

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * The engine's primary input is a transcript table
   * (conv_id, turn_idx, role, text, tool, ts). The driver's scale tables
   * don't ship one, so we derive it deterministically (pure projection +
-  * one window) from `events` — the same derivation is expressible in
-  * ANSI SQL, which is what lets every transcript query have a DuckDB
-  * oracle. In production this view is replaced by the real Iceberg
-  * transcript table; nothing downstream changes.
+  * one window on `conv_id`) from `events` — the same derivation is
+  * expressible in ANSI SQL, which is what lets every transcript query
+  * have a DuckDB oracle. In production this view is replaced by the real
+  * Iceberg transcript table; nothing downstream changes.
   */
 object Tables {
 
@@ -32,12 +32,17 @@ object Tables {
 
   /** SQL-equivalent derivation documented in SparkEntry.oracleSql's
     * `turns` CTE — keep the two in lockstep.
+    * The numbering window is partitioned on `conv_id`, a column of its
+    * input: `'c' || user_id` is one to one (null to null), so the CTE's
+    * `PARTITION BY user_id` numbers the same rows, and a filter on
+    * `conv_id` (a resume's buckets) goes below the window to the scan.
     */
   def transcript(spark: SparkSession, dir: String): DataFrame = {
     val events = read(spark, dir, "events")
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      .withColumn("conv_id", concat(lit("c"), col("user_id").cast("string")))
+    val w = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("event_id"))
     events.select(
-      concat(lit("c"), col("user_id").cast("string")).as("conv_id"),
+      col("conv_id"),
       (row_number().over(w) - 1).cast("int").as("turn_idx"),
       when(col("event_type").isin("click", "view"), "user")
         .when(col("event_type") === "purchase", "assistant")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -14,7 +14,9 @@ import graft.schema.TranscriptGen
 
 /** The flagship's executed plan (`Pipeline.featuresFromTurns`): one
   * exchange per as-of side over plain parquet and none over a table
-  * bucketed on conv_id, two window passes, and no aggregate.
+  * bucketed on conv_id, two window passes, and no aggregate; over the
+  * transcript derived from `events` (`Pipeline.features`), the same two
+  * exchanges.
   */
 class PipelinePlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
@@ -46,5 +48,19 @@ class PipelinePlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val plan = executed(Pipeline.featuresFromTurns(Bucketed.read(spark, "t_plan_shape")))
     assert(exchanges(plan) == 0, plan)
     assert(collect(plan) { case w: WindowExec => w }.size == 2, plan)
+  }
+
+  test("Pipeline.features: one exchange per as-of side, no checkpoint scan, " +
+    "the derivation's row_number on each side") {
+    val plan = executed(Pipeline.features(spark, TestSpark.eventsDir(60)))
+    val asof = collect(plan) { case j: AsOfJoinExec => j }
+    assert(asof.size == 1)
+    assert(exchanges(asof.head.left) == 1 && exchanges(asof.head.right) == 1, plan)
+    assert(exchanges(plan) == 2, plan)
+    assert(collect(plan) { case r: RDDScanExec => r }.isEmpty, plan)
+    // the flagship's two window passes over the left side's row_number,
+    // and a row_number on the right side
+    assert(collect(asof.head.left) { case w: WindowExec => w }.size == 3, plan)
+    assert(collect(plan) { case w: WindowExec => w }.size == 4, plan)
   }
 }

@@ -41,4 +41,17 @@ class LocfScalableSpec extends AnyFunSuite {
       .collect().head.getLong(0)
     assert(chunksPerConv > 1, "mega conversation should span several chunks")
   }
+
+  test("a row whose key or chunk is null takes no carry-in from another chunk") {
+    def at(sec: Long) = new java.sql.Timestamp(sec * 1000L)
+    val df = Seq[(String, Int, java.sql.Timestamp, String)](
+      (null, 0, at(0), "a"), (null, 1, at(600), null),
+      ("k", 0, at(0), "b"), ("k", 1, null, null), ("k", 2, at(600), null)
+    ).toDF("conv_id", "turn_idx", "ts", "tool")
+    val got = LocfScalable(df, Seq("conv_id"), "ts", "turn_idx", "tool",
+      chunkSeconds = 300L, as = "got")
+      .select("conv_id", "turn_idx", "got").as[(String, Int, String)].collect().toSet
+    assert(got == Set((null, 0, "a"), (null, 1, null),
+      ("k", 0, "b"), ("k", 1, null), ("k", 2, "b")))
+  }
 }

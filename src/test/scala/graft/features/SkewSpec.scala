@@ -1,13 +1,46 @@
 package graft.features
 
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.schema.TranscriptGen
 
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The columns each hash exchange of `df`'s executed plan partitions
+    * on, the fields of a struct column included.
+    */
+  private def hashedOn(df: DataFrame): Seq[Set[String]] = {
+    GraftBridge.forceEvaluate(df)
+    collect(GraftBridge.executedPlan(df)) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning =>
+        h.expressions.flatMap(e => e.dataType match {
+          case s: StructType => s.fieldNames.toSeq
+          case _ => e.references.toSeq.map(_.name)
+        }).toSet
+      }
+  }
+
+  test("over an input partitioned on the key, the hot-key operators still " +
+    "shuffle on their salt or chunk") {
+    val turns = TranscriptGen.generateDF(spark, 60).repartition($"conv_id")
+    val salted = hashedOn(Skew.saltedCountSum(turns, Seq("conv_id"), "turn_idx", salts = 8))
+    assert(salted.exists(_("__salt")), salted)
+    val topK = hashedOn(Skew.topKPerKey(turns, Seq("conv_id"),
+      Seq($"ts".desc, $"turn_idx".asc), k = 3, salts = 8))
+    assert(topK.exists(_("__salt")), topK)
+    val locf = hashedOn(LocfScalable(turns, Seq("conv_id"), "ts", "turn_idx", "tool",
+      chunkSeconds = 300L))
+    assert(locf.exists(_("__chunk")), locf)
+  }
 
   test("salted two-phase aggregation equals plain groupBy") {
     // one mega-key + long tail

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.RowNumber
 import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, QueryExecution, SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -163,8 +164,12 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
 
   /** `FeatureBackfillJob`'s body over `turns`: returns the observation. */
   private def backfill(turns: DataFrame, out: String, runId: String,
-      nBuckets: Int = 8): Map[String, Any] = {
-    val (features, obs) = Lineage.observed(Pipeline.featuresFromTurns(turns), "ts")
+      nBuckets: Int = 8): Map[String, Any] =
+    backfillFeatures(Pipeline.featuresFromTurns(turns), out, runId, nBuckets)
+
+  private def backfillFeatures(flagship: DataFrame, out: String, runId: String,
+      nBuckets: Int): Map[String, Any] = {
+    val (features, obs) = Lineage.observed(flagship, "ts")
     Checkpoint.write(features, "conv_id", out, nBuckets, "spec", runId)
     obs.get
   }
@@ -258,6 +263,33 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
     }
     assert(rightSort.nonEmpty)
     assert(rightSort.flatMap(s => rowsOut(s.children.head)).sum == invTools)
+  }
+
+  test("resume over Pipeline.features numbers and windows only the " +
+    "invalidated buckets' rows") {
+    val dir = TestSpark.eventsDir(80)
+    def run(out: String, runId: String) =
+      backfillFeatures(Pipeline.features(spark, dir), out, runId, nBuckets = 32)
+    val clean = tmp()
+    run(clean, "e0")
+    val out = tmp()
+    run(out, "e1")
+    val inv = (0 until 32 by 4).toSet
+    Checkpoint.invalidate(out, inv)
+    val plans = captured(run(out, "e2"))
+    val (rows, _) = Checkpoint.metrics(out)
+    val invRows = inv.toSeq.map(rows).sum
+    assert(invRows > 0 && invRows < rows.values.sum)
+    // the lowest window of the as-of join's left side is the derivation's
+    // turn numbering
+    val rowNumber = lowest(plans.flatMap(collect(_) { case j: AsOfJoinExec => j.left })) {
+      case w: WindowExec => w
+    }
+    assert(rowNumber.size == 1, plans)
+    val numbering = rowNumber.head.asInstanceOf[WindowExec]
+    assert(numbering.windowExpression.exists(_.find(_.isInstanceOf[RowNumber]).nonEmpty))
+    assert(rowsOut(numbering.child) == Some(invRows))
+    assert(sorted(out) == sorted(clean))
   }
 
   /** The file scans of the plans that run the as-of join. */
