@@ -1,28 +1,48 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.compile.WaryGate
-import graft.features.{AsOfNative, Sessionize, Windows}
 import graft.io.Tables
+import graft.plans.FeatureScan
 import graft.rules._
 import graft.rules.VRule._
 
 /** The flagship end-to-end feature pipeline (SURVEY.md §7.2): validate +
   * normalize each turn via the wary gate, then per-conversation point-in-
-  * time features — previous turn text (lag), tool state (as-of/LOCF),
-  * running tool-call count, and a gap session id.
+  * time features — previous turn text (lag), tool state (LOCF), running
+  * tool-call count, a gap session id, and the as-of last tool.
   *
-  * Plan shape at scale: the gate is a narrow projection fused into the
-  * scan; all window features share one (conv_id)-partitioned sort and run
-  * in two window passes (lag, LOCF, running count and the session's
-  * previous ts in one, none of them with a computed argument; the session
-  * running sum over the boundary flags in the second). Over a plain table
-  * the executed plan has two exchanges, one per as-of side, both on
-  * conv_id; over a table bucketed on conv_id it has none
-  * (`PipelinePlanSpec`). `features`, over the transcript derived from
-  * `events`, has the same two: the derivation's window is on conv_id.
+  * Plan shape: the gate is a narrow projection fused into the scan; all
+  * features come from ONE ordered pass, `plans.FeatureScanExec`, over one
+  * `conv_id`-clustered sort by `(conv_id, ts, turn_idx)`. Over a plain
+  * table the executed plan has one exchange and one sort; over a table
+  * bucketed on conv_id it has no exchange; `features`, over the
+  * transcript derived from `events`, has one exchange, below the
+  * derivation's `row_number` window (`PipelinePlanSpec`).
+  *
+  * Contract, per conversation (a null `conv_id` is one conversation), in
+  * `ts ASC NULLS FIRST, turn_idx ASC` order:
+  *  - `prev_text`: the previous row's gated `text`; null on the first row;
+  *  - `tool_state`: the last non-null `tool` at or before the row, null-ts
+  *    rows included;
+  *  - `n_tool_calls`: the running `count(tool)`, never null;
+  *  - `session_seq`: the running count of boundaries, minus 1. A row is a
+  *    boundary when there is no previous row, when the previous row's `ts`
+  *    is null, or when `cast(ts AS long) - cast(prev_ts AS long) > 1800`
+  *    (whole seconds, floored); a null `ts` after a non-null one is not;
+  *  - `session_id`: `concat_ws('#', conv_id, session_seq)`, just the
+  *    sequence number for a null `conv_id`;
+  *  - `last_tool`: the `tool` of the last row with non-null `tool` and
+  *    non-null `ts <=` the row's `ts`, tool turns of the same `ts` later by
+  *    `turn_idx` included; null-ts rows neither serve nor receive one.
+  *
+  * Row for row this is `Windows.withLag`/`locf`/`runningCount` and
+  * `Sessionize` over `Windows.turnWindow`, then
+  * `AsOfNative.joinBackward(rightOrderBy = Seq("turn_idx"))` of the tool
+  * turns, with the same column names, order, types and nullability
+  * (`FeatureScanPropertySpec`).
   */
 object Pipeline {
 
@@ -47,24 +67,8 @@ object Pipeline {
     val gated = WaryGate(turns, turnSpec)
       .withColumn("n_errors", size(col("errors")))
       .drop("errors")
-    val w = Windows.turnWindow
-    val withWin = Sessionize(
-      Windows.runningCount(
-        Windows.locf(
-          Windows.withLag(gated, w, "text", 1, as = "prev_text"),
-          w, "tool", as = "tool_state"),
-        w, col("tool").isNotNull, as = "n_tool_calls"),
-      Seq("conv_id"), "ts", gapSeconds = 1800L, tieBreak = Seq("turn_idx"))
-
-    // as-of: latest per-conversation tool observation at ts <= anchor ts.
-    // The NATIVE sort-merge exec (custom plan) is ~6.7x faster than the
-    // union-merge formulation at 25M rows: each side sorts separately and
-    // the merge streams, instead of window-scanning the combined union.
-    // Of tool turns sharing a ts, the latest turn wins: the exec sorts the
-    // right side by (conv_id, ts, turn_idx) and keeps the last row.
-    val obs = turns
-      .filter(col("tool").isNotNull)
-      .select(col("conv_id"), col("ts"), col("turn_idx"), col("tool").as("last_tool"))
-    AsOfNative.joinBackward(withWin, obs, Seq("conv_id"), rightOrderBy = Seq("turn_idx"))
+    GraftBridge.ofRows(gated, FeatureScan(GraftBridge.logicalPlan(gated),
+      key = "conv_id", ts = "ts", order = "turn_idx", text = "text", tool = "tool",
+      gapSeconds = 1800L))
   }
 }

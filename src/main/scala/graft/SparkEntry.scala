@@ -3253,7 +3253,7 @@ object SparkEntry {
       val canon = concat_ws("\u001f",
         col("doc_id").cast("string"), col("lang"),
         col("n_chars").cast("string"),
-        coalesce(col("text"), lit(" ")))
+        coalesce(col("text"), lit("\u0000")))
       val a = docs(s, dir)
       val b = a.filter(col("doc_id") % 997 =!= 0)
         .withColumn("text",

@@ -124,7 +124,7 @@ object AsOf {
     * PREFER [[AsOfNative.joinForward]] in pipelines — the native
     * sort-merge exec is ~2x faster at bench scale; this union-merge
     * formulation is the portable fallback and differential-test reference
-    * (mirroring the backward pair, where Pipeline defaults to native).
+    * (mirroring the backward pair, where the native join is the default).
     */
   def joinForward(
       left: DataFrame,

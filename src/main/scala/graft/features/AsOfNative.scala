@@ -12,7 +12,7 @@ import graft.plans.AsOfJoinPlan
   * Right rows that share (keys, rightTs): `joinBackward`'s `rightOrderBy`
   * breaks the tie — the match is the LAST such row in ascending
   * `rightOrderBy` order (`rightOrderBy = Seq("turn_idx")` is the latest
-  * turn, as Pipeline uses it), and those columns are not returned. Without
+  * turn, the flagship's `last_tool`), and those columns are not returned. Without
   * it, "last wins" among them is sort-order-dependent, as it is in the
   * union-merge variant: make the right side unique per (keys, rightTs) or
   * name a tie-break.

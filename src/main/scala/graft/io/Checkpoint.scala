@@ -3,7 +3,7 @@ package graft.io
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, In, Literal, Murmur3Hash, Pmod, Predicate, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 import graft.plans.{AsOfFilterPushdown, RemainingBucketsScan}
 
@@ -29,15 +29,17 @@ import graft.plans.{AsOfFilterPushdown, RemainingBucketsScan}
   *    distributed pass (dynamic partitioned write into a staging dir);
   *  - each completed bucket is atomically promoted (directory rename) and
   *    recorded as a manifest entry `_manifest/bucket-N.json` carrying
-  *    lineage (input path, run id) and metrics (row count);
+  *    lineage (input path, run id) and metrics (row count), beside the
+  *    rows' schema (`_manifest/schema.json`);
   *  - a killed run leaves only staging garbage + already-committed
   *    buckets; rerunning converges to the identical final output;
   *  - a resume keeps only the remaining buckets' rows with a
   *    [[RemainingBuckets]] predicate below the observations its input ends
-  *    with (`Lineage.observed`). [[AsOfFilterPushdown]] carries it into both
-  *    inputs of the as-of join, so only those rows are shuffled, windowed
-  *    and joined, and over a bucketed table [[RemainingBucketsScan]] reads
-  *    only the table buckets that can hold them.
+  *    with (`Lineage.observed`). [[AsOfFilterPushdown]] carries it below
+  *    the flagship's feature scan (and into both inputs of an as-of join),
+  *    so only those rows are shuffled, sorted and scanned, and over a
+  *    bucketed table [[RemainingBucketsScan]] reads only the table buckets
+  *    that can hold them.
   */
 object Checkpoint {
 
@@ -104,6 +106,8 @@ object Checkpoint {
 
   private def manifestDir(out: String): Path = Paths.get(out, "_manifest")
 
+  private val SchemaFile = "schema.json"
+
   def committedBuckets(out: String): Set[Int] = {
     val dir = manifestDir(out)
     if (!Files.exists(dir)) Set.empty
@@ -151,6 +155,11 @@ object Checkpoint {
     val stagedCounts = counts.get("rows").asInstanceOf[Seq[Long]]
 
     Files.createDirectories(manifestDir(out))
+    // the schema of the rows, for a read of an output that holds none
+    val schemaTmp = manifestDir(out).resolve(s".$SchemaFile.$runId.tmp")
+    Files.writeString(schemaTmp, df.schema.json)
+    Files.move(schemaTmp, manifestDir(out).resolve(SchemaFile),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     val stagingPath = Paths.get(staging)
     val promoted = scala.collection.mutable.Set[Int]()
 
@@ -236,9 +245,21 @@ object Checkpoint {
     GraftBridge.ofRows(df, place(plan))
   }
 
-  /** Read back the committed dataset (all buckets). */
-  def read(spark: SparkSession, out: String): DataFrame =
-    spark.read.parquet(s"$out/bucket=*")
+  /** Read back the committed dataset (all buckets). An output whose
+    * committed buckets hold no rows has no data directory to read a schema
+    * from; it reads as an empty frame of the schema [[write]] stored beside
+    * the manifest, nullable as a parquet read makes every column.
+    */
+  def read(spark: SparkSession, out: String): DataFrame = {
+    val hasData = !Files.isDirectory(Paths.get(out)) ||
+      scala.util.Using.resource(Files.list(Paths.get(out))) {
+        _.iterator.asScala.exists(_.getFileName.toString.startsWith("bucket="))
+      }
+    val schemaFile = manifestDir(out).resolve(SchemaFile)
+    if (hasData || !Files.exists(schemaFile)) spark.read.parquet(s"$out/bucket=*")
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      GraftBridge.asNullable(DataType.fromJson(Files.readString(schemaFile)).asInstanceOf[StructType]))
+  }
 
   /** Operational repair: drop chosen buckets' data + manifest entries so
     * the next [[write]] recomputes exactly those buckets from the input
@@ -260,7 +281,10 @@ object Checkpoint {
     if (!Files.exists(dir)) return (Map.empty, 0.0)
     val rows = scala.util.Using.resource(Files.list(dir)) { stream =>
       stream.iterator.asScala
-        .filter(_.getFileName.toString.endsWith(".json"))
+        .filter { p =>
+          val name = p.getFileName.toString
+          name.startsWith("bucket-") && name.endsWith(".json")
+        }
         .map { p =>
           val s = Files.readString(p)
           val b = """"bucket":(\d+)""".r.findFirstMatchIn(s).get.group(1).toInt

@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeMap, Expression, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeMap, AttributeSet, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-/** Custom optimizer rule: push predicates THROUGH the native as-of join.
-  * Catalyst's stock filter pushdown does not know our node, so without
+/** Custom optimizer rule: push predicates THROUGH the native as-of join
+  * and the flagship's [[FeatureScan]]. Catalyst's stock filter pushdown
+  * does not know these nodes, so without
   * this a `features.filter(anchorPred)` scans and merges every anchor row
   * before discarding — at 10^12 turns that is the difference between
   * reading a partition and reading the table.
@@ -23,6 +24,9 @@ import org.apache.spark.sql.types._
   *    cannot tell two equal keys apart. Any other right-side predicate is
   *    NOT pushable (dropping observations changes which one is "latest").
   *    Checkpoint's resume predicate is such a key-only predicate.
+  *  - Over a [[FeatureScan]], a deterministic predicate that reads only
+  *    its key moves into its input. Safe because every feature is per key:
+  *    such a predicate keeps or drops whole keys.
   *
   * [[graft.GraftExtensions]] puts the rule in Spark's fixed-point
   * operator-optimization batches, next to `PushDownPredicates`, so whatever
@@ -31,20 +35,33 @@ import org.apache.spark.sql.types._
 object AsOfFilterPushdown extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
-      case f @ Filter(cond, j: AsOfJoinPlan) =>
-        val (pushable, kept) = splitConjunctivePredicates(cond)
-          .partition(p =>
-            p.deterministic && p.references.subsetOf(j.left.outputSet))
-        if (pushable.isEmpty) f
-        else {
+      case f @ Filter(_, j: AsOfJoinPlan) =>
+        pushDown(f, _.references.subsetOf(j.left.outputSet)) { pushable =>
           val toRight = pushable.flatMap(onRightKeys(j, _))
-          val newJoin = j.copy(
+          j.copy(
             left = Filter(pushable.reduce(And), j.left),
             right = toRight.reduceOption(And)
               .map(Filter(_, j.right)).getOrElse(j.right))
-          kept.reduceOption(And).map(Filter(_, newJoin)).getOrElse(newJoin)
+        }
+      case f @ Filter(_, s: FeatureScan) =>
+        pushDown(f, _.references.subsetOf(AttributeSet(s.key))) { pushable =>
+          s.copy(child = Filter(pushable.reduce(And), s.child))
         }
     }
+
+  /** `f`'s node rebuilt by `below` from the deterministic conjuncts that
+    * `canPush` accepts, under a filter of the others; `f` if there are none.
+    */
+  private def pushDown(f: Filter, canPush: Expression => Boolean)(
+      below: Seq[Expression] => LogicalPlan): LogicalPlan = {
+    val (pushable, kept) = splitConjunctivePredicates(f.condition)
+      .partition(p => p.deterministic && canPush(p))
+    if (pushable.isEmpty) f
+    else {
+      val node = below(pushable)
+      kept.reduceOption(And).map(Filter(_, node)).getOrElse(node)
+    }
+  }
 
   /** `p` over the right keys, if it reads only left keys that pair with a
     * right key of the same type whose equality is identity of value.

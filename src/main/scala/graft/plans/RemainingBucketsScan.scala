@@ -17,10 +17,11 @@ import graft.io.Checkpoint.RemainingBuckets
   * It narrows a `FileSourceScanExec`'s bucket set when the `FilterExec`
   * right above it holds a [[RemainingBuckets]] over the relation's one
   * bucket column; [[Bucketed.tableBuckets]] says which table buckets can
-  * hold the remaining checkpoint buckets. [[AsOfFilterPushdown]] copies the
-  * predicate into the as-of join's right input, so both scans of the
-  * flagship prune. A scan of a table without buckets, and one under no
-  * such predicate (a full write), is left as it is.
+  * hold the remaining checkpoint buckets. [[AsOfFilterPushdown]] moves the
+  * predicate below the flagship's [[FeatureScan]] (and copies it into an
+  * as-of join's right input), so the flagship's one scan prunes. A scan of
+  * a table without buckets, and one under no such predicate (a full
+  * write), is left as it is.
   *
   * [[graft.GraftExtensions]] registers it as a post-planner rule, which
   * Spark applies to adaptive plans (`spark.sql.adaptive.enabled`, on by

@@ -45,6 +45,11 @@ object GraftBridge {
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** `s` with every field nullable, nested ones included, as a file
+    * source reads it.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   def optimizedPlan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.optimizedPlan
 

@@ -101,6 +101,44 @@ class LeakagePropertySpec extends AnyFunSuite {
     }
   }
 
+  test("the flagship reads no row after its anchor: last_tool, tool_state, " +
+    "n_tool_calls and prev_text recomputed in plain Scala (15 seeds)") {
+    for (seed <- 300 to 314) {
+      val rnd = new Random(seed)
+      // out of order, heavy ts collisions, null ts and tool, one row per
+      // (conv, turn_idx)
+      val rows = rnd.shuffle(genRows(seed).map { case (c, i, t) =>
+        (c, i, s"turn $i", if (rnd.nextInt(3) == 0) s"t${rnd.nextInt(3)}" else null,
+          if (rnd.nextInt(6) == 0) null else new Timestamp(t))
+      })
+      val out = graft.Pipeline.featuresFromTurns(
+          rows.toDF("conv_id", "turn_idx", "text", "tool", "ts").repartition(3))
+        .select("conv_id", "turn_idx", "text", "prev_text", "tool_state",
+          "n_tool_calls", "last_tool")
+        .collect()
+        .map(r => (r.getString(0), r.getInt(1)) -> r).toMap
+      rows.groupBy(_._1).foreach { case (conv, turns) =>
+        // the flagship's order: ts nulls first, then turn_idx
+        val ordered = turns.sortBy(t => (Option(t._5).map(_.getTime), t._2))
+        ordered.zipWithIndex.foreach { case ((_, idx, _, _, ts), p) =>
+          val row = out((conv, idx))
+          val upTo = ordered.take(p + 1)
+          val clue = s"seed $seed $conv turn $idx"
+          assert(Option(row.getString(4)) == upTo.flatMap(t => Option(t._4)).lastOption, clue)
+          assert(row.getLong(5) == upTo.count(_._4 != null), clue)
+          val prevText = if (p == 0) None else Option(out((conv, ordered(p - 1)._2)).getString(2))
+          assert(Option(row.getString(3)) == prevText, clue)
+          // the latest (ts, turn_idx) tool turn with ts <= the anchor's
+          val lastTool = Option(ts).flatMap { anchor =>
+            turns.filter(t => t._4 != null && t._5 != null && !t._5.after(anchor))
+              .maxByOption(t => (t._5.getTime, t._2)).map(_._4)
+          }
+          assert(Option(row.getString(6)) == lastTool, clue)
+        }
+      }
+    }
+  }
+
   test("sessionize ids are dense, start at 0, and respect the gap (15 seeds)") {
     for (seed <- 100 to 114) {
       val rows = genRows(seed)

@@ -6,7 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.RowNumber
-import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, QueryExecution, SortExec, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, QueryExecution, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -18,7 +18,7 @@ import org.scalatest.time.SpanSugar._
 
 import graft.{Pipeline, TestSpark}
 import graft.metrics.Lineage
-import graft.plans.AsOfJoinExec
+import graft.plans.FeatureScanExec
 import graft.schema.TranscriptGen
 
 /** Checkpoint/resume: a partial run + resume must equal a clean run
@@ -203,12 +203,6 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
     case _ => None
   }
 
-  /** The nodes `pick` selects that have no such node below them. */
-  private def lowest(plans: Seq[SparkPlan])(
-      pick: PartialFunction[SparkPlan, SparkPlan]): Seq[SparkPlan] =
-    plans.flatMap(collect(_)(pick))
-      .filter(n => n.children.flatMap(collect(_)(pick)).isEmpty)
-
   test("resume: the observation counts exactly the promoted buckets' rows") {
     val turns = TranscriptGen.generateDF(spark, 60)
     val out = tmp()
@@ -251,18 +245,11 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
     assert(scans.nonEmpty && scans.forall(_.optionalBucketSet.isEmpty))
     val (rows, _) = Checkpoint.metrics(out)
     val invRows = inv.toSeq.map(rows).sum
-    val lowestWindow = lowest(plans) { case w: WindowExec => w }
-    assert(lowestWindow.nonEmpty)
-    assert(lowestWindow.flatMap(w => rowsOut(w.children.head)).sum == invRows)
-    // the right input of the as-of: the invalidated buckets' tool turns
-    // enter its lowest operator above the scan stage (its sort)
-    val invTools = turns.filter(col("tool").isNotNull &&
-      pmod(hash(col("conv_id")), lit(8)).isin(inv.toSeq: _*)).count()
-    val rightSort = lowest(plans.flatMap(collect(_) { case j: AsOfJoinExec => j.right })) {
-      case s: SortExec => s
-    }
-    assert(rightSort.nonEmpty)
-    assert(rightSort.flatMap(s => rowsOut(s.children.head)).sum == invTools)
+    // the one pass computes the windows and the as-of over exactly the
+    // invalidated buckets' rows
+    val fused = plans.flatMap(collect(_) { case f: FeatureScanExec => f })
+    assert(fused.size == 1, plans)
+    assert(rowsOut(fused.head.child) == Some(invRows))
   }
 
   test("resume over Pipeline.features numbers and windows only the " +
@@ -280,21 +267,22 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
     val (rows, _) = Checkpoint.metrics(out)
     val invRows = inv.toSeq.map(rows).sum
     assert(invRows > 0 && invRows < rows.values.sum)
-    // the lowest window of the as-of join's left side is the derivation's
-    // turn numbering
-    val rowNumber = lowest(plans.flatMap(collect(_) { case j: AsOfJoinExec => j.left })) {
-      case w: WindowExec => w
-    }
+    // the only window below the one pass is the derivation's turn
+    // numbering; both see exactly the invalidated buckets' rows
+    val fused = plans.flatMap(collect(_) { case f: FeatureScanExec => f })
+    assert(fused.size == 1, plans)
+    val rowNumber = collect(fused.head) { case w: WindowExec => w }
     assert(rowNumber.size == 1, plans)
-    val numbering = rowNumber.head.asInstanceOf[WindowExec]
+    val numbering = rowNumber.head
     assert(numbering.windowExpression.exists(_.find(_.isInstanceOf[RowNumber]).nonEmpty))
     assert(rowsOut(numbering.child) == Some(invRows))
+    assert(rowsOut(fused.head.child) == Some(invRows))
     assert(sorted(out) == sorted(clean))
   }
 
-  /** The file scans of the plans that run the as-of join. */
+  /** The file scans of the plans that run the flagship's one pass. */
   private def flagshipScans(plans: Seq[SparkPlan]): Seq[FileSourceScanExec] =
-    plans.filter(p => collect(p) { case j: AsOfJoinExec => j }.nonEmpty)
+    plans.filter(p => collect(p) { case f: FeatureScanExec => f }.nonEmpty)
       .flatMap(collect(_) { case s: FileSourceScanExec => s })
 
   private def bucketSet(s: FileSourceScanExec): Option[Set[Int]] =
@@ -309,16 +297,16 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
     val full = captured(backfill(Bucketed.read(spark, table), out, "b1"))
     Checkpoint.invalidate(out, Set(1, 6))
     val plans = captured(backfill(Bucketed.read(spark, table), out, "b2"))
-      .filter(p => collect(p) { case j: AsOfJoinExec => j }.nonEmpty)
+      .filter(p => collect(p) { case f: FeatureScanExec => f }.nonEmpty)
     assert(plans.nonEmpty)
     val exchanges = plans.flatMap(collect(_) { case e: ShuffleExchangeExec => e })
     assert(exchanges.isEmpty, s"resume shuffles:\n${plans.mkString("\n")}")
     assert(sorted(out) == sorted(clean))
     // 8 table buckets, 8 checkpoint buckets: gcd 8, so checkpoint bucket c
-    // is table bucket c, on both sides of the as-of join
-    assert(flagshipScans(plans).map(bucketSet) == Seq(Some(Set(1, 6)), Some(Set(1, 6))))
+    // is table bucket c, read by the flagship's one scan
+    assert(flagshipScans(plans).map(bucketSet) == Seq(Some(Set(1, 6))))
     // a full write prunes nothing
-    assert(flagshipScans(full).map(bucketSet) == Seq(None, None))
+    assert(flagshipScans(full).map(bucketSet) == Seq(None))
   }
 
   test("resume of checkpoint buckets {0, 4, …, 28} of 32 over 8 table " +
@@ -333,9 +321,8 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
     val plans = captured(backfill(Bucketed.read(spark, table), out, "g2", nBuckets = 32))
     val scans = flagshipScans(plans)
     // gcd(8, 32) = 8, and every invalidated bucket is ≡ 0 or 4 (mod 8)
-    assert(scans.map(bucketSet) == Seq(Some(Set(0, 4)), Some(Set(0, 4))))
-    assert(scans.map(_.metadata.get("SelectedBucketsCount")) ==
-      Seq(Some("2 out of 8"), Some("2 out of 8")))
+    assert(scans.map(bucketSet) == Seq(Some(Set(0, 4))))
+    assert(scans.map(_.metadata.get("SelectedBucketsCount")) == Seq(Some("2 out of 8")))
     assert(plans.flatMap(collect(_) { case e: ShuffleExchangeExec => e }).isEmpty)
     assert(sorted(out) == sorted(clean))
     assert(Checkpoint.metrics(out)._1 == Checkpoint.metrics(clean)._1)
@@ -358,6 +345,35 @@ class CheckpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper with TimeL
       assert(plans.flatMap(collect(_) { case s: LocalTableScanExec => s }).nonEmpty)
     }
     assert(sorted(out) == before)
+  }
+
+  test("FeatureScanExec's row and match counts equal a recount of the output") {
+    val dir = tmp()
+    TranscriptGen.generateDF(spark, 60).write.mode("overwrite").parquet(dir)
+    val out = tmp()
+    val plans = captured(backfill(spark.read.parquet(dir), out, "m1"))
+    val fused = plans.flatMap(collect(_) { case f: FeatureScanExec => f })
+    assert(fused.size == 1, plans)
+    val written = Checkpoint.read(spark, out)
+    val matched = written.filter(col("last_tool").isNotNull).count()
+    assert(matched > 0)
+    assert(fused.head.metrics("numOutputRows").value == written.count())
+    assert(fused.head.metrics("numMatchedRows").value == matched)
+  }
+
+  test("read of an output whose committed buckets hold no rows: no rows, " +
+    "the writer's schema") {
+    val df = TranscriptGen.generateDF(spark, 20).filter(col("turn_idx") < 0)
+    val out = tmp()
+    assert(Checkpoint.write(df, "conv_id", out, 8, "spec", "n1") == (0 until 8).toSet)
+    assert(Checkpoint.metrics(out)._1.values.sum == 0L)
+    val back = Checkpoint.read(spark, out)
+    assert(back.collect().isEmpty)
+    assert(back.schema == GraftBridge.asNullable(df.schema))
+    // the schema a read of rows gives
+    val full = tmp()
+    Checkpoint.write(TranscriptGen.generateDF(spark, 20), "conv_id", full, 8, "spec", "n2")
+    assert(back.schema == Checkpoint.read(spark, full).schema)
   }
 
   test("partition histogram reports skew") {

@@ -33,10 +33,11 @@ class StackedWindowFusionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .exists(_.child.output.exists(_.name.startsWith("_w")))
   }
 
-  /** The flagship's window block (`Pipeline.featuresFromTurns`), counting
-    * the rows where `counted` holds.
+  /** A stacked window block over `Windows.turnWindow` (lag, LOCF, a
+    * running count and `Sessionize`; the flagship computes these features
+    * in `FeatureScanExec` instead), counting the rows where `counted` holds.
     */
-  private def flagshipWindows(s: SparkSession, counted: Column): DataFrame = {
+  private def stackedWindows(s: SparkSession, counted: Column): DataFrame = {
     val w = Windows.turnWindow
     Sessionize(
       Windows.runningCount(
@@ -54,16 +55,16 @@ class StackedWindowFusionSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     // a count whose flag is an expression (`CASE WHEN … THEN 1 ELSE 0 END`)
     val long = length(col("text")) > 20
-    val fused = flagshipWindows(spark, long)
+    val fused = stackedWindows(spark, long)
     assert(windowPasses(fused) == 2)
-    val unfused = flagshipWindows(unfusedSession, long)
+    val unfused = stackedWindows(unfusedSession, long)
     assert(windowPasses(unfused) == 3)
     assert(rows(fused) == rows(unfused))
-    // the flagship's own count, `isNotNull(tool)`, counts the column: no
-    // flag, so two passes without the rule too
-    val flagship = flagshipWindows(unfusedSession, col("tool").isNotNull)
-    assert(windowPasses(flagship) == 2)
-    assert(rows(flagship) == rows(flagshipWindows(spark, col("tool").isNotNull)))
+    // a count of `isNotNull(tool)` counts the column: no flag, so two
+    // passes without the rule too
+    val ofColumn = stackedWindows(unfusedSession, col("tool").isNotNull)
+    assert(windowPasses(ofColumn) == 2)
+    assert(rows(ofColumn) == rows(stackedWindows(spark, col("tool").isNotNull)))
   }
 
   test("a non-deterministic alias is not moved") {

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftExtensions, TestSpark}
-import graft.plans.{AsOfFilterPushdown, AsOfStrategy, RemainingBucketsScan, StackedWindowFusion}
+import graft.plans.{AsOfFilterPushdown, AsOfStrategy, FeatureScanStrategy, RemainingBucketsScan,
+  StackedWindowFusion}
 
 /** graft's planner pieces reach a session through its extensions, each
   * exactly once, although the test session sees both ways in: the
@@ -19,6 +20,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   private def assertRegisteredOnce(s: classic.SparkSession): Unit = {
     val state = s.sessionState
     assert(state.planner.strategies.count(_ eq AsOfStrategy) == 1)
+    assert(state.planner.strategies.count(_ eq FeatureScanStrategy) == 1)
     assert(state.adaptiveRulesHolder.queryPostPlannerStrategyRules
       .count(_ eq RemainingBucketsScan) == 1)
     val batches = state.optimizer.batches
