@@ -25,15 +25,15 @@ import graft.schema.TranscriptGen
   * carries the band.
   *
   * The input is a ~10^7-turn deterministic synthetic transcript table
-  * (FIXTURES.md scale tier) staged once as parquet — large enough that the
+  * (FIXTURES.md scale tier) staged once as parquet under the directory
+  * named by the one argument (`runMain graft.ScalingBench <stagingDir>`;
+  * a later run reuses a completed staging) — large enough that the
   * measured region is dominated by distributed work, not session fixed
   * costs.
   */
 object ScalingBench {
 
-  private val stagedDir = "/tmp/graft_scale_turns"
-
-  private def stage(nConvs: Long): Long = {
+  private def stage(stagedDir: String, nConvs: Long): Long = {
     val spark = GraftSession.local(32)
     try {
       if (!Files.exists(Paths.get(s"$stagedDir/_SUCCESS"))) {
@@ -52,11 +52,11 @@ object ScalingBench {
   /** Per-rep (pipeline, bare-scan, curation-pack) seconds at `cores`.
     * The pack job is the curation family's scaling witness: role as the
     * stratum makes every stratum a MEGA-stratum (4 strata over the whole
-    * corpus) — precisely the shape the two-phase cumsum exists for; a
+    * corpus) — precisely the shape the chunked scan exists for; a
     * single-window pack would serialize each into one task and the N→4N
     * ratio would collapse.
     */
-  private def run(
+  private def run(stagedDir: String,
       cores: Int, reps: Int): (Seq[Double], Seq[Double], Seq[Double]) = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -105,6 +105,8 @@ object ScalingBench {
     s"""{"lo":${f"${xs.min}%.3f"},"mean":${f"${xs.sum / xs.size}%.3f"},"hi":${f"${xs.max}%.3f"}}"""
 
   def main(args: Array[String]): Unit = {
+    require(args.length == 1, "usage: graft.ScalingBench <stagingDir>")
+    val stagedDir = args(0)
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_CONVS", "400000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // default pairs: 1→4 (below the box's bandwidth ceiling — the clean
@@ -114,10 +116,10 @@ object ScalingBench {
         val Array(lo, hi) = p.split(":"); (lo.trim.toInt, hi.trim.toInt)
       }
 
-    val n = stage(nConvs)
+    val n = stage(stagedDir, nConvs)
     val pairJsons = pairs.map { case (lo, hi) =>
-      val (pLo, sLo, cLo) = run(lo, reps)
-      val (pHi, sHi, cHi) = run(hi, reps)
+      val (pLo, sLo, cLo) = run(stagedDir, lo, reps)
+      val (pHi, sHi, cHi) = run(stagedDir, hi, reps)
       val ratio = hi.toDouble / lo
       val eff = pLo.zip(pHi).map { case (a, b) => (a / b) / ratio }
       val scanEff = sLo.zip(sHi).map { case (a, b) => (a / b) / ratio }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.compile.WaryGate
 import graft.exprs.SimHash64
-import graft.features.{AsOf, Sessionize, Windows}
+import graft.features.{AsOf, ChunkedScan, Sessionize, Windows}
 import graft.io.Tables
 import graft.ops.{Dedup, Similarity, TextStats}
 import graft.rules._
@@ -130,8 +130,9 @@ object SparkEntry {
 
     // --- mega-key-safe LOCF (two-phase; same semantics as q_locf_backfill) ---
     "q_locf_scalable" -> ((s, dir) =>
-      graft.features.LocfScalable(turns(s, dir), Seq("conv_id"), "ts",
-        "turn_idx", "tool", chunkSeconds = 1800L, as = "tool_locf")
+      ChunkedScan(turns(s, dir), Seq("conv_id"), floor(col("ts").cast("long") / 1800L),
+          Seq(col("ts"), col("turn_idx")), ChunkedScan.UpToCurrent,
+          ChunkedScan.Last("tool_locf", col("tool")))
         .select("conv_id", "turn_idx", "tool_locf")),
 
     // --- gap sessionization -------------------------------------------------

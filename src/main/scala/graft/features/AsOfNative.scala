@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 
 import graft.plans.AsOfJoinPlan
 
@@ -110,12 +110,25 @@ object AsOfNative {
       allowExactMatches: Boolean = true,
       toleranceMs: Option[Long] = None
   ): DataFrame = {
-    import org.apache.spark.sql.functions.{col, unix_micros}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     require(!left.columns.contains("__negts") &&
       !right.columns.contains("__negts"),
       "joinForward reserves the column name __negts")
-    def neg(df: DataFrame, c: String) = df.schema(c).dataType match {
+    val negL = left.withColumn("__negts", negatedMicros(left, leftTs))
+    val negR = right
+      .withColumn("__negts", negatedMicros(right, rightTs))
+      .drop(rightTs)
+    joinBackward(negL, negR, keys, "__negts", "__negts",
+      allowExactMatches, toleranceMs.map(_ * 1000000L))
+      .drop("__negts")
+  }
+
+  /** `-micros(c)` of `df`'s time column `c`: a timestamp's epoch micros,
+    * a long as epoch seconds. Sorting ascending on it is `c` descending.
+    */
+  private[features] def negatedMicros(df: DataFrame, c: String): Column = {
+    import org.apache.spark.sql.functions.{col, unix_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+    df.schema(c).dataType match {
       case LongType => -col(c) * 1000000L // epoch seconds -> micros
       case TimestampNTZType =>
         // read the NTZ's raw micros directly — cast("timestamp") would
@@ -125,12 +138,5 @@ object AsOfNative {
           graft.exprs.NtzMicros(GraftBridge.expression(col(c))))
       case _ => -unix_micros(col(c))
     }
-    val negL = left.withColumn("__negts", neg(left, leftTs))
-    val negR = right
-      .withColumn("__negts", neg(right, rightTs))
-      .drop(rightTs)
-    joinBackward(negL, negR, keys, "__negts", "__negts",
-      allowExactMatches, toleranceMs.map(_ * 1000000L))
-      .drop("__negts")
   }
 }

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   *
   * Encoding keys are low-cardinality by nature (role, tool, source), so
   * the naive single window serializes each key's entire history into one
-  * task — the mega-key problem. The default here is the same two-phase
-  * shape as [[graft.ops.Curation.packShards]] / [[LocfScalable]]: a
-  * range frame within (key, time-chunk) plus an exclusive running carry
-  * over per-chunk totals, so a key's history parallelizes across
-  * chunks. [[targetEncodeSingleWindow]] is kept as the differential twin.
+  * task — the mega-key problem. The default here is a [[ChunkedScan]],
+  * as in [[graft.ops.Curation.packShards]]: a range frame within (key,
+  * time-chunk) plus an exclusive running carry over per-chunk totals, so
+  * a key's history parallelizes across chunks. [[targetEncodeSingleWindow]]
+  * is kept as the differential twin.
   */
 object Encode {
 
@@ -44,10 +44,10 @@ object Encode {
     * count is zero (nothing observed yet), mirroring SQL `SUM` over an
     * empty frame.
     *
-    * Scale shape: one range-frame window per (key, chunk) — bounded by
-    * `chunkSeconds` of history, not by the key's total volume — then a
-    * rows-frame carry over one row per chunk. Epoch ties cannot straddle
-    * a chunk boundary (same epoch ⇒ same chunk), so the strict-exclusion
+    * Scale shape: a [[ChunkedScan]] with a strict range frame over
+    * `chunkSeconds` chunks — a task is bounded by one chunk of history,
+    * not by the key's total volume. Epoch ties cannot straddle a chunk
+    * boundary (same epoch ⇒ same chunk), so the strict-exclusion
     * semantics survive the split exactly.
     */
   def targetEncode(
@@ -61,53 +61,20 @@ object Encode {
   ): DataFrame = {
     require(keys.nonEmpty, "targetEncode needs at least one key column")
     require(chunkSeconds > 0, "chunkSeconds must be positive")
-    val reserved = Seq(cntAs, sumAs, "__te_epoch", "__te_chunk", "__te_lbl",
-      "__te_wc", "__te_ws", "__te_tc", "__te_tsum", "__te_cc", "__te_cs")
+    val reserved = Seq(cntAs, sumAs, "__te_epoch", "__te_lbl")
     require(!reserved.exists(df.columns.contains),
       s"targetEncode reserves the column names ${reserved.mkString(", ")}")
-
-    val df1 = df
-      .withColumn("__te_epoch", guardedEpoch(col(tsCol)))
-      .withColumn("__te_chunk", floorDiv(col("__te_epoch"), chunkSeconds))
-      .withColumn("__te_lbl", label.cast("long"))
-
-    // phase 1: strict-past range frame WITHIN (keys, chunk)
-    val w1 = Window
-      .partitionBy((keys :+ "__te_chunk").map(col): _*)
-      .orderBy(col("__te_epoch"))
-      .rangeBetween(Window.unboundedPreceding, -1)
-
-    // phase 2: per-chunk totals, then the exclusive carry over one row
-    // per chunk — what each chunk's frame starts from
-    val totals = df1.groupBy((keys :+ "__te_chunk").map(col): _*)
-      .agg(count(col("__te_lbl")).as("__te_tc"),
-        sum(col("__te_lbl")).as("__te_tsum"))
-    val wc = Window.partitionBy(keys.map(col): _*).orderBy(col("__te_chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = totals
-      .withColumn("__te_cc", coalesce(sum(col("__te_tc")).over(wc), lit(0L)))
-      .withColumn("__te_cs", coalesce(sum(col("__te_tsum")).over(wc), lit(0L)))
-      .select(col("__te_chunk").as("__te_jchunk") +:
-        col("__te_cc") +: col("__te_cs") +:
-        keys.map(k => col(k).as(s"__te_j_$k")): _*)
-
-    // null-safe key match: a null key is its own encoding group (window
-    // PARTITION BY semantics), so the carry join must not drop its rows
-    val joinCond = keys
-      .map(k => df1(k) <=> carry(s"__te_j_$k"))
-      .reduce(_ && _) && (df1("__te_chunk") === carry("__te_jchunk"))
-
-    val cnt = col("__te_cc") +
-      coalesce(count(col("__te_lbl")).over(w1), lit(0L))
-    val sm = col("__te_cs") + coalesce(sum(col("__te_lbl")).over(w1), lit(0L))
-    df1
-      .join(carry, joinCond)
-      .withColumn(cntAs, cnt)
+    val lbl = col("__te_lbl")
+    ChunkedScan(
+        df.withColumn("__te_epoch", guardedEpoch(col(tsCol)))
+          .withColumn("__te_lbl", label.cast("long")),
+        keys, floorDiv(col("__te_epoch"), chunkSeconds), Seq(col("__te_epoch")),
+        ChunkedScan.RangeBefore,
+        ChunkedScan.Sum(cntAs, when(lbl.isNotNull, 1L).otherwise(0L), lit(0L)),
+        ChunkedScan.Sum(sumAs, lbl, lit(0L)))
       .withColumn(sumAs, when(col(cntAs) === 0L, lit(null).cast("long"))
-        .otherwise(sm))
-      .drop("__te_epoch", "__te_chunk", "__te_lbl", "__te_cc", "__te_cs",
-        "__te_jchunk")
-      .drop(keys.map(k => s"__te_j_$k"): _*)
+        .otherwise(col(sumAs)))
+      .drop("__te_epoch", "__te_lbl")
   }
 
   /** Single-window reference formulation — one task per key, kept as the
@@ -142,7 +109,7 @@ object Encode {
     *
     * `Window.partitionBy(group).orderBy(value)` would sort each whole
     * group in one task; this instead counts strictly-smaller values with
-    * the same two-phase chunked frame as [[targetEncode]] (rank−1 IS that
+    * the same chunked frame as [[targetEncode]] (rank−1 IS that
     * count, by definition of min-rank), so a dominant group parallelizes
     * across `valueChunk`-wide value ranges. One extra group-sized
     * aggregate + join supplies n. `valueCol` must be non-null

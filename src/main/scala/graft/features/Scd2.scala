@@ -1,7 +1,6 @@
 package graft.features
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SCD-2 dimension-history build: turn a change-event feed
@@ -12,20 +11,14 @@ import org.apache.spark.sql.functions._
   * as-of against the change feed ≡ interval lookup against this
   * history, without the interval table ever being materialized twice).
   *
-  * The core is a TWO-PHASE lead: `valid_to` is `lead(ts)` over
-  * `(key, ts, tie)` order, but a naive per-key window serializes a
-  * mega-key (one conversation with 10⁹ turns, one entity carrying half
-  * the feed) into a single task. Same cure as
-  * [[LocfScalable]]: rows are chunked by time span, the lead resolves
-  * within each (key, chunk) task, and only each chunk's FIRST change
-  * (one row per non-empty chunk — tiny) rides a per-key carry window to
-  * give every chunk-final row its successor in the key's next non-empty
-  * chunk.
-  *
-  * Scale shape: one full-volume shuffle on (key, chunk) for the in-chunk
-  * windows, one chunk-count-sized shuffle for the carry, one partial-agg
-  * shuffle for the heads — tasks are bounded by the chunk span, never by
-  * the hottest key's row count.
+  * `valid_to` is `lead(ts)` over `(key, ts, tie)` order, but a naive
+  * per-key window serializes a mega-key (one conversation with 10⁹
+  * turns, one entity carrying half the feed) into a single task. Here
+  * the lead is a [[ChunkedScan]] in negated time: the last `ts` among
+  * the rows strictly before the current one in descending `(ts, tie)`
+  * order (the time negation of [[AsOfNative.joinForward]]), over
+  * time-span chunks. Tasks are bounded by the chunk span, never by the
+  * hottest key's row count; a null key is a key.
   */
 object Scd2 {
 
@@ -35,7 +28,8 @@ object Scd2 {
     * tie order — deterministic, and the final same-instant change wins
     * any `[ts, ts)`-excluded lookup, matching as-of semantics. A null
     * `tsCol` is a corrupt change event and FAILS LOUD rather than
-    * landing in an arbitrary chunk.
+    * landing in an arbitrary chunk. `tieCol` is integral (bitwise NOT
+    * reverses its order).
     *
     * `chunkSpanSec` bounds a task to one key's changes within the span —
     * size it so `hottest key × span` fits a task (86400 = a day per
@@ -49,33 +43,16 @@ object Scd2 {
       chunkSpanSec: Long = 86400L
   ): DataFrame = {
     require(chunkSpanSec > 0, "chunkSpanSec must be positive")
-    val reserved = Seq("__schunk", "__slead", "__shead", "__snext",
-      "valid_to", "is_current")
+    val reserved = Seq("valid_to", "is_current")
     require(!reserved.exists(changes.columns.contains),
       s"validIntervals reserves the column names ${reserved.mkString(", ")}")
     val ts = col(tsCol)
     val guardedSec = when(ts.isNotNull, unix_timestamp(ts))
       .otherwise(raise_error(lit(
         s"validIntervals: null $tsCol — a change event must carry its timestamp")))
-    val d = changes.withColumn("__schunk",
-      floor(guardedSec / chunkSpanSec))
-    // phase 1: lead within (key, chunk) — tasks bounded by the span
-    val w1 = Window.partitionBy(col(keyCol), col("__schunk"))
-      .orderBy(ts, col(tieCol))
-    // phase 2: each non-empty chunk's FIRST change ts, then the next
-    // non-empty chunk's head per key — one row per chunk, so the per-key
-    // carry window is chunk-count-sized no matter how hot the key is
-    val heads = d.groupBy(col(keyCol), col("__schunk"))
-      .agg(min(struct(ts.as("t"), col(tieCol).as("b"))).as("__shead"))
-      .select(col(keyCol), col("__schunk"), col("__shead.t").as("__shead"))
-    val wc = Window.partitionBy(col(keyCol)).orderBy(col("__schunk"))
-    val nextHeads = heads
-      .withColumn("__snext", lead(col("__shead"), 1).over(wc))
-      .select(col(keyCol), col("__schunk"), col("__snext"))
-    d.withColumn("__slead", lead(ts, 1).over(w1))
-      .join(nextHeads, Seq(keyCol, "__schunk"))
-      .withColumn("valid_to", coalesce(col("__slead"), col("__snext")))
+    ChunkedScan(changes, Seq(keyCol), -floor(guardedSec / chunkSpanSec),
+        Seq(AsOfNative.negatedMicros(changes, tsCol), bitwise_not(col(tieCol))),
+        ChunkedScan.RowsBefore, ChunkedScan.Last("valid_to", ts))
       .withColumn("is_current", col("valid_to").isNull)
-      .drop("__schunk", "__slead", "__snext")
   }
 }

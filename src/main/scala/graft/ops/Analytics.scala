@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.features.ChunkedScan
+
 /** Dataset-level analytics a curation pipeline runs before and after
   * every transform: per-column profiles (the schema-drift / data-quality
   * gate), exact histograms (distribution eyeballing at any scale), and
@@ -358,14 +360,13 @@ object Analytics {
     * and a float AUC would not sit under a byte-exact oracle.
     *
     * Scale shape: one partial-agg shuffle to the (segment, score)
-    * histogram, then the prefix-sum over distinct scores runs TWO-PHASE
-    * (the [[graft.features.LocfScalable]] / globalRank pattern): an
-    * in-chunk window partitioned by (segment, floor(score/chunkSpan))
-    * plus a chunk-count-sized carry window per segment — a dominant
-    * segment with billions of distinct float scores never serializes
-    * into one task. Rows with a NULL score or label are excluded
-    * (stated, not hidden); a segment with no positives or no negatives
-    * reports auc_den = 0 — AUC is undefined there, the caller decides.
+    * histogram, then the prefix-sum over distinct scores is a
+    * [[graft.features.ChunkedScan]] over (segment, floor(score/chunkSpan))
+    * chunks — a dominant segment with billions of distinct float scores
+    * never serializes into one task. Rows with a NULL score or label are
+    * excluded (stated, not hidden); a NULL segment is a segment, as under
+    * `groupBy`. A segment with no positives or no negatives reports
+    * auc_den = 0 — AUC is undefined there, the caller decides.
     */
   def aucExact(
       df: DataFrame,
@@ -382,22 +383,8 @@ object Analytics {
       .agg(
         sum(when(label, 1L).otherwise(0L)).cast(dec).as("__np"),
         sum(when(label, 0L).otherwise(1L)).cast(dec).as("__nn"))
-      .withColumn("__chunk", floor(col("__s") / chunkSpan))
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("seg"), col("__chunk")).orderBy(col("__s"))
-      .rowsBetween(Long.MinValue, -1)
-    val wCarry = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("seg")).orderBy(col("__chunk"))
-      .rowsBetween(Long.MinValue, -1)
-    val carry = h.groupBy(col("seg"), col("__chunk"))
-      .agg(sum(col("__nn")).as("__ctot"))
-      .withColumn("__carry",
-        coalesce(sum(col("__ctot")).over(wCarry), lit(0L).cast(dec)))
-      .select(col("seg"), col("__chunk"), col("__carry"))
-    h.withColumn("__win",
-        coalesce(sum(col("__nn")).over(wIn), lit(0L).cast(dec)))
-      .join(carry, Seq("seg", "__chunk"))
-      .withColumn("__nb", (col("__carry") + col("__win")).cast(dec))
+    ChunkedScan(h, Seq("seg"), floor(col("__s") / chunkSpan), Seq(col("__s")),
+        ChunkedScan.RowsBefore, ChunkedScan.Sum("__nb", col("__nn"), lit(0L).cast(dec)))
       .groupBy(col("seg"))
       .agg(
         sum(col("__np")).cast(dec).as("n_pos"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.features.ChunkedScan
+
 /** Training-mix curation operators: deterministic stratified sampling
   * (mixture weighting) and token-budget shard packing — the two
   * operations that turn a cleaned corpus into an actual training dataset.
@@ -430,19 +432,13 @@ object Curation {
     * larger than the whole budget still lands in exactly one shard) —
     * the standard streaming-packer contract, stated rather than hidden.
     *
-    * Scale shape — TWO-PHASE, mega-stratum safe (the [[graft.features
-    * .LocfScalable]] range-partition pattern applied to a running sum):
-    * real training mixtures are dominated by one stratum (web ≈ 80%), so
-    * a per-stratum window would serialize tens of TB into one task. Here
-    * each stratum is split into order-contiguous chunks
-    * (`floor(orderCol / chunkSpan)`):
-    *   1. exclusive cumsum WITHIN each (stratum, chunk) — chunk-sized
-    *      tasks, a mega stratum spreads over many of them;
-    *   2. per-chunk token totals, then an exclusive cumsum ACROSS chunks
-    *      (one row per chunk — tiny) gives each chunk's carry-in;
-    *   global exclusive cumsum = carry-in + within-chunk cumsum, exactly.
-    * No task ever sorts more than one chunk of real rows; byte-equality
-    * with the single-window formulation is tested in CurationSpec.
+    * Scale shape — mega-stratum safe: real training mixtures are
+    * dominated by one stratum (web ≈ 80%), so a per-stratum window would
+    * serialize tens of TB into one task. The exclusive cumsum is a
+    * [[graft.features.ChunkedScan]] over order-contiguous chunks
+    * (`floor(orderCol / chunkSpan)`), so no task ever sorts more than one
+    * chunk of real rows; byte-equality with the single-window
+    * formulation is tested in CurationSpec.
     *
     * `orderCol` must be numeric or timestamp (anything whose long cast is
     * order-preserving) and unique within its stratum. Token counts must
@@ -460,42 +456,41 @@ object Curation {
   ): DataFrame = {
     require(budgetTokens > 0, "budgetTokens must be positive")
     require(chunkSpan > 0, "chunkSpan must be positive")
-    val reserved = Seq("n_tokens", "shard_seq", "__pchunk", "__pwithin",
-      "__pcarry", "__ptot")
+    val reserved = Seq("n_tokens", "shard_seq", "__pstart")
     require(!reserved.exists(df.columns.contains),
       s"packShards reserves the column names ${reserved.mkString(", ")}")
-    val guarded = when(tokens >= 0L, tokens).otherwise(raise_error(concat(
-      lit("packShards: negative token count "), tokens.cast("string"),
-      lit(" — token counts must be >= 0"))))
-    val df1 = df
-      .withColumn("n_tokens", guarded)
-      .withColumn("__pchunk",
-        floor(col(orderCol).cast("long") / chunkSpan))
-    // phase 1: exclusive cumsum within (stratum, chunk)
-    val w1 = Window.partitionBy(col(strataCol), col("__pchunk"))
-      .orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // phase 2: chunk totals, then the exclusive across-chunk cumsum over
-    // one row per chunk — the carry-in each chunk starts from
-    val chunkTotals = df1.groupBy(col(strataCol), col("__pchunk"))
-      .agg(sum(col("n_tokens")).as("__ptot"))
-    val wc = Window.partitionBy(col(strataCol)).orderBy(col("__pchunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = chunkTotals
-      .withColumn("__pcarry", coalesce(sum(col("__ptot")).over(wc), lit(0L)))
-      .select(col(strataCol), col("__pchunk"), col("__pcarry"))
     // integral `div`, not float `/`: a stratum's cumulative token sum at
     // 100 TB can pass 2^53, where a double quotient misplaces boundary
     // documents — keep the module's exact-integer contract
-    df1
-      .withColumn("__pwithin",
-        coalesce(sum(col("n_tokens")).over(w1), lit(0L)))
-      .join(carry, Seq(strataCol, "__pchunk"))
+    tokenStarts(df, strataCol, orderCol, tokens, chunkSpan, "packShards")
       .withColumn("shard_seq",
-        call_function("div", col("__pcarry") + col("__pwithin"),
-          lit(budgetTokens)).cast("long"))
-      .drop("__pchunk", "__pwithin", "__pcarry")
+        call_function("div", col("__pstart"), lit(budgetTokens)).cast("long"))
+      .drop("__pstart")
   }
+
+  /** `tokens`, failing loud (raise_error, naming `op`) when negative. */
+  private def nonNegative(tokens: Column, op: String): Column =
+    when(tokens >= 0L, tokens).otherwise(raise_error(concat(
+      lit(s"$op: negative token count "), tokens.cast("string"),
+      lit(" — token counts must be >= 0"))))
+
+  /** `df` plus `n_tokens` (the [[nonNegative]] token count) and
+    * `__pstart`, the exclusive running token sum per stratum in
+    * `orderCol` order — a [[graft.features.ChunkedScan]] over
+    * `floor(orderCol / chunkSpan)` chunks.
+    */
+  private def tokenStarts(
+      df: DataFrame,
+      strataCol: String,
+      orderCol: String,
+      tokens: Column,
+      chunkSpan: Long,
+      op: String
+  ): DataFrame =
+    ChunkedScan(df.withColumn("n_tokens", nonNegative(tokens, op)),
+      Seq(strataCol), floor(col(orderCol).cast("long") / chunkSpan),
+      Seq(col(orderCol)), ChunkedScan.RowsBefore,
+      ChunkedScan.Sum("__pstart", col("n_tokens"), lit(0L)))
 
   /** Length-bucketed dataloader BATCHES with padding-waste accounting —
     * the dynamic-batching step between packed shards and the trainer:
@@ -559,16 +554,11 @@ object Curation {
     * unique id tiebreak does) and `phase` = floor(rank · nPhases / n),
     * the equal-size curriculum phase index in [0, nPhases).
     *
-    * Scale shape — the [[packShards]] two-phase cumsum applied to COUNTS:
-    *   1. rows are split into order-contiguous chunks
-    *      (`floor(orderCol / chunkSpan)`; the long cast and floor-div are
-    *      both monotone, so chunk order is rank order);
-    *   2. row_number WITHIN each chunk (chunk-sized tasks, ordered by
-    *      (orderCol, tieCol));
-    *   3. per-chunk row counts, then an exclusive cumsum ACROSS chunks
-    *      (one row per chunk — metadata-sized, the only unpartitioned
-    *      window) gives each chunk's starting rank;
-    *   global_rank = chunk carry-in + within-chunk row_number − 1.
+    * Scale shape — the [[packShards]] chunked cumsum applied to COUNTS:
+    * global_rank is the count of rows strictly before in (orderCol,
+    * tieCol) order, a keyless [[graft.features.ChunkedScan]] over
+    * order-contiguous chunks (`floor(orderCol / chunkSpan)`; the long
+    * cast and floor-div are both monotone, so chunk order is rank order).
     * No task ever sorts more than one chunk of real rows; a value so hot
     * that one chunk dominates needs a smaller `chunkSpan` (the chunk map
     * only has to be monotone in orderCol).
@@ -585,35 +575,23 @@ object Curation {
   ): DataFrame = {
     require(nPhases > 0, "nPhases must be positive")
     require(chunkSpan > 0, "chunkSpan must be positive")
-    val reserved = Seq("global_rank", "phase", "__gchunk", "__gwithin",
-      "__gcarry", "__gtot", "__gn")
+    val reserved = Seq("global_rank", "phase", "__gn")
     require(!reserved.exists(df.columns.contains),
       s"globalRank reserves the column names ${reserved.mkString(", ")}")
-    val df1 = df.withColumn("__gchunk",
-      floor(col(orderCol).cast("long") / chunkSpan))
-    val w1 = Window.partitionBy(col("__gchunk"))
-      .orderBy(col(orderCol), col(tieCol))
-    val wc = Window.orderBy(col("__gchunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // chunk-count-sized frame: the unpartitioned window below sorts one
-    // row per chunk, not per row — deliberately tiny, like
-    // interleaveSchedule's manifest rank
-    val carry = df1.groupBy(col("__gchunk"))
-      .agg(count(lit(1)).as("__gtot"))
-      .withColumn("__gcarry", coalesce(sum(col("__gtot")).over(wc), lit(0L)))
-      .select(col("__gchunk"), col("__gcarry"))
     val n = df.agg(count(lit(1)).as("__gn"))
-    df1
-      .withColumn("__gwithin", row_number().over(w1).cast("long"))
-      .join(carry, Seq("__gchunk"))
+    // the 0-based rank is the count of rows strictly before, keyless:
+    // the carry window is the only unpartitioned one, over one row per
+    // chunk — deliberately tiny, like interleaveSchedule's manifest rank
+    ChunkedScan(df, Nil, floor(col(orderCol).cast("long") / chunkSpan),
+        Seq(col(orderCol), col(tieCol)), ChunkedScan.RowsBefore,
+        ChunkedScan.Sum("global_rank", lit(1L), lit(0L)))
       .crossJoin(broadcast(n))
-      .withColumn("global_rank", col("__gcarry") + col("__gwithin") - 1L)
       // integral div: rank·nPhases stays exact where a double ratio of
       // 10^12-row ranks would round phase boundaries
       .withColumn("phase",
         call_function("div", col("global_rank") * nPhases, col("__gn"))
           .cast("long"))
-      .drop("__gchunk", "__gwithin", "__gcarry", "__gn")
+      .drop("__gn")
   }
 
   /** Single-window reference formulation of [[packShards]] — one task per
@@ -632,12 +610,9 @@ object Curation {
     require(!df.columns.contains("n_tokens") &&
       !df.columns.contains("shard_seq"),
       "packShards reserves the column names n_tokens and shard_seq")
-    val guarded = when(tokens >= 0L, tokens).otherwise(raise_error(concat(
-      lit("packShards: negative token count "), tokens.cast("string"),
-      lit(" — token counts must be >= 0"))))
     val w = Window.partitionBy(col(strataCol)).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("n_tokens", guarded)
+    df.withColumn("n_tokens", nonNegative(tokens, "packShards"))
       .withColumn("shard_seq",
         call_function("div",
           coalesce(sum(col("n_tokens")).over(w), lit(0L)),
@@ -732,9 +707,8 @@ object Curation {
     * same shard [[packShards]] assigns, so the two layouts agree on
     * where a document starts.
     *
-    * Scale shape: the same two-phase mega-stratum-safe exclusive cumsum
-    * as [[packShards]] (chunked within-sums + tiny across-chunk carry),
-    * then a scan-fused explode over the piece range. A document
+    * Scale shape: the same mega-stratum-safe chunked exclusive cumsum
+    * as [[packShards]], then a scan-fused explode over the piece range. A document
     * spanning p shards inherently emits p rows — documents that could
     * approach the shard count should be pre-chopped
     * ([[TextStats.chunkWords]]) so no single input row fans out
@@ -751,43 +725,24 @@ object Curation {
     require(budgetTokens > 0, "budgetTokens must be positive")
     require(chunkSpan > 0, "chunkSpan must be positive")
     val reserved = Seq("n_tokens", "shard_seq", "piece_seq", "tok_start",
-      "tok_end", "doc_tok_start", "doc_tok_end",
-      "__pchunk", "__pwithin", "__pcarry", "__ptot", "__g")
+      "tok_end", "doc_tok_start", "doc_tok_end", "__pstart")
     require(!reserved.exists(df.columns.contains),
       s"packSplit reserves the column names ${reserved.mkString(", ")}")
-    val guarded = when(tokens >= 0L, tokens).otherwise(raise_error(concat(
-      lit("packSplit: negative token count "), tokens.cast("string"),
-      lit(" — token counts must be >= 0"))))
-    val df1 = df
-      .withColumn("n_tokens", guarded)
-      .withColumn("__pchunk", floor(col(orderCol).cast("long") / chunkSpan))
-    val w1 = Window.partitionBy(col(strataCol), col("__pchunk"))
-      .orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val chunkTotals = df1.groupBy(col(strataCol), col("__pchunk"))
-      .agg(sum(col("n_tokens")).as("__ptot"))
-    val wc = Window.partitionBy(col(strataCol)).orderBy(col("__pchunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = chunkTotals
-      .withColumn("__pcarry", coalesce(sum(col("__ptot")).over(wc), lit(0L)))
-      .select(col(strataCol), col("__pchunk"), col("__pcarry"))
     val b = lit(budgetTokens)
-    val s0 = call_function("div", col("__g"), b)
+    val g = col("__pstart")
+    val s0 = call_function("div", g, b)
     val s1 = when(col("n_tokens") === 0L, s0)
-      .otherwise(call_function("div", col("__g") + col("n_tokens") - 1L, b))
-    val pstart = greatest(col("__g"), col("shard_seq") * b)
-    val pend = least(col("__g") + col("n_tokens"), (col("shard_seq") + 1L) * b)
-    df1
-      .withColumn("__pwithin", coalesce(sum(col("n_tokens")).over(w1), lit(0L)))
-      .join(carry, Seq(strataCol, "__pchunk"))
-      .withColumn("__g", col("__pcarry") + col("__pwithin"))
+      .otherwise(call_function("div", g + col("n_tokens") - 1L, b))
+    val pstart = greatest(g, col("shard_seq") * b)
+    val pend = least(g + col("n_tokens"), (col("shard_seq") + 1L) * b)
+    tokenStarts(df, strataCol, orderCol, tokens, chunkSpan, "packSplit")
       .withColumn("shard_seq", explode(sequence(s0, s1)))
       .withColumn("piece_seq", (col("shard_seq") - s0).cast("long"))
       .withColumn("tok_start", pstart - col("shard_seq") * b)
       .withColumn("tok_end", pend - col("shard_seq") * b)
-      .withColumn("doc_tok_start", pstart - col("__g"))
-      .withColumn("doc_tok_end", pend - col("__g"))
-      .drop("__pchunk", "__pwithin", "__pcarry", "__g")
+      .withColumn("doc_tok_start", pstart - g)
+      .withColumn("doc_tok_end", pend - g)
+      .drop("__pstart")
   }
 
   /** DSIR-style hashed importance scoring for TARGET-DOMAIN data

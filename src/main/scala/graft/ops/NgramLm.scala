@@ -36,8 +36,9 @@ object NgramLm {
     * `right_types` are count windows OVER B: each partition is one
     * word's distinct-neighbor set, bounded by vocabulary size, never by
     * corpus size (the skew ceiling is "how many distinct words follow
-    * 'the'" — fixed-width rows, fine in one task; the LocfScalable
-    * two-phase pattern applies if a vocabulary ever outgrows that).
+    * 'the'" — fixed-width rows, fine in one task; a
+    * [[graft.features.ChunkedScan]] applies if a vocabulary ever
+    * outgrows that).
     * `d_total` rides a broadcast one-row crossJoin (the [[Retrieval]]
     * bm25Stats pattern) — its branch recomputes B's lineage, so the op
     * is two corpus scans total, both scan-bound.

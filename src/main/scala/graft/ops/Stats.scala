@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.features.ChunkedScan
+
 /** Exact distribution statistics for corpus dashboards — the numbers a
   * curation run is tuned against (doc-length percentiles per language,
   * token-count spread per source).
@@ -30,13 +32,11 @@ object Stats {
     *      volume. The value at a rank never depends on the tie order
     *      (equal values are adjacent in (value, tie) order), so the
     *      tiebreaker only documents the rank contract;
-    *   1. values are range-chunked (`floor(value / chunkSpan)`); per
-    *      (group, chunk) count totals plus an across-chunk exclusive
-    *      cumsum (one row per chunk — tiny) give each chunk's rank
-    *      offset ([[graft.features.LocfScalable]]'s two-phase pattern);
-    *   2. a within-chunk cumulative count (tasks bounded by ≤ chunkSpan
-    *      distinct integer values) yields each value's global cumulative
-    *      count cum(≤v); v holds rank r  ⇔  cum(<v) < r ≤ cum(≤v).
+    *   1. each value's cumulative count cum(≤v) is a
+    *      [[graft.features.ChunkedScan]] over value-range chunks
+    *      (`floor(value / chunkSpan)`; tasks bounded by ≤ chunkSpan
+    *      distinct integer values), and one per-group aggregate gives n;
+    *      v holds rank r  ⇔  cum(<v) < r ≤ cum(≤v).
     * The rank predicate stays pure integer arithmetic, no division:
     * r = ceil(q·n/10⁴)  ⇔  cum(≤v)·10⁴ ≥ q·n  ∧  cum(<v)·10⁴ < q·n.
     * Byte-equality with the single-window formulation is tested in
@@ -56,39 +56,15 @@ object Stats {
       s"duplicate quantile levels would produce duplicate output columns: " +
         qsBp.mkString(", "))
     require(chunkSpan > 0, "chunkSpan must be positive")
-    val reserved = Seq("__v", "__c", "__chunk", "__tot", "__before", "__n",
-      "__wcum", "__cum", "__cg", "__cc")
+    val reserved = Seq("__v", "__c", "__cum", "__n", "__tg")
     require(!reserved.exists(df.columns.contains),
       s"exactGroupedQuantiles reserves the column names " +
         reserved.mkString(", "))
     // phase 0: the one full-volume shuffle — map-side combinable
     val vc = df.groupBy(col(groupCol), value.as("__v"))
       .agg(count(lit(1)).as("__c"))
-      .withColumn("__chunk", floor(col("__v").cast("long") / chunkSpan))
-    // phase 1: per-chunk totals; across-chunk exclusive cumsum = each
-    // chunk's starting rank offset, plus the group's total n
-    val chunkTotals = vc.groupBy(col(groupCol), col("__chunk"))
-      .agg(sum(col("__c")).as("__tot"))
-    val wc = Window.partitionBy(col(groupCol)).orderBy(col("__chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(col(groupCol))
-    // null-safe carry join: a NULL group is a group (the oracle's GROUP
-    // BY keeps it) — a plain equi join would silently drop its rows here
-    val carry = chunkTotals
-      .withColumn("__before", coalesce(sum(col("__tot")).over(wc), lit(0L)))
-      .withColumn("__n", sum(col("__tot")).over(wAll))
-      .select(col(groupCol).as("__cg"), col("__chunk").as("__cc"),
-        col("__before"), col("__n"))
-    // phase 2: within-chunk inclusive cumulative count; global
-    // cum(≤v) = chunk offset + within-chunk cumulative
-    val w1 = Window.partitionBy(col(groupCol), col("__chunk"))
-      .orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = vc
-      .withColumn("__wcum", sum(col("__c")).over(w1))
-      .join(carry, col(groupCol) <=> col("__cg") &&
-        col("__chunk") <=> col("__cc"))
-      .withColumn("__cum", col("__before") + col("__wcum"))
+    val cum = withGroupTotal(cumulative(vc, groupCol, chunkSpan, lit(0L)),
+      vc, groupCol, col("__c"), "__n")
     val picks = qsBp.map { q =>
       val qn = lit(q.toLong) * col("__n")
       val isPick = col("__cum") * 10000L >= qn &&
@@ -115,10 +91,9 @@ object Stats {
     * weights ride decimal(38,0): q·W at 10^12 rows of 10^5-token docs is
     * ~10^21 — past int64.
     *
-    * Scale shape: identical two-phase geometry to
-    * [[exactGroupedQuantiles]] — one full-volume partial-agg shuffle to
-    * (group, value) weight sums, chunked in-chunk windows plus a
-    * chunk-count-sized carry, so a dominant group never single-task
+    * Scale shape: identical geometry to [[exactGroupedQuantiles]] — one
+    * full-volume partial-agg shuffle to (group, value) weight sums, then
+    * the chunked running sum, so a dominant group never single-task
     * sorts. Output: (group, w_total, q<bp>…).
     */
   def weightedGroupedQuantiles(
@@ -135,8 +110,7 @@ object Stats {
       s"duplicate quantile levels would produce duplicate output columns: " +
         qsBp.mkString(", "))
     require(chunkSpan > 0, "chunkSpan must be positive")
-    val reserved = Seq("__v", "__wc", "__chunk", "__tot", "__before",
-      "__wt", "__wcum", "__cum", "__cg", "__cc")
+    val reserved = Seq("__v", "__c", "__cum", "__wt", "__tg")
     require(!reserved.exists(df.columns.contains),
       s"weightedGroupedQuantiles reserves the column names " +
         reserved.mkString(", "))
@@ -145,35 +119,46 @@ object Stats {
       lit("weightedGroupedQuantiles: negative weight "),
       weight.cast("string"), lit(" — weights must be >= 0"))))
     val vc = df.groupBy(col(groupCol), value.as("__v"))
-      .agg(sum(guarded.cast(dec)).as("__wc"))
-      .withColumn("__chunk", floor(col("__v").cast("long") / chunkSpan))
-    val wc = Window.partitionBy(col(groupCol)).orderBy(col("__chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(col(groupCol))
-    val carry = vc.groupBy(col(groupCol), col("__chunk"))
-      .agg(sum(col("__wc")).as("__tot"))
-      .withColumn("__before",
-        coalesce(sum(col("__tot")).over(wc), lit(0L).cast(dec)))
-      .withColumn("__wt", sum(col("__tot")).over(wAll))
-      .select(col(groupCol).as("__cg"), col("__chunk").as("__cc"),
-        col("__before"), col("__wt"))
-    val w1 = Window.partitionBy(col(groupCol), col("__chunk"))
-      .orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // null-safe carry join — a NULL group is a group (see the unweighted twin)
-    val cum = vc
-      .withColumn("__wcum", sum(col("__wc")).over(w1))
-      .join(carry, col(groupCol) <=> col("__cg") &&
-        col("__chunk") <=> col("__cc"))
-      .withColumn("__cum", col("__before") + col("__wcum"))
+      .agg(sum(guarded.cast(dec)).as("__c"))
+    val cum = withGroupTotal(
+      cumulative(vc, groupCol, chunkSpan, lit(0L).cast(dec)),
+      vc, groupCol, col("__c"), "__wt")
     val picks = qsBp.map { q =>
       val qw = lit(q.toLong).cast(dec) * col("__wt")
       val isPick = col("__cum") * 10000L >= qw &&
-        (col("__cum") - col("__wc")) * 10000L < qw
+        (col("__cum") - col("__c")) * 10000L < qw
       max(when(isPick, col("__v"))).as(s"q$q")
     }
     cum.groupBy(col(groupCol))
       .agg(max(col("__wt")).cast(dec).as("w_total"), picks: _*)
+  }
+
+  /** `vc`'s (group, `__v`, `__c`) rows plus `__cum`, the running sum of
+    * `__c` over the group's values up to and including `__v` — a
+    * [[graft.features.ChunkedScan]] over `floor(__v / chunkSpan)` chunks.
+    */
+  private def cumulative(
+      vc: DataFrame,
+      groupCol: String,
+      chunkSpan: Long,
+      zero: Column
+  ): DataFrame =
+    ChunkedScan(vc, Seq(groupCol), floor(col("__v").cast("long") / chunkSpan),
+      Seq(col("__v")), ChunkedScan.UpToCurrent,
+      ChunkedScan.Sum("__cum", col("__c"), zero))
+
+  /** `df` plus `as`, the per-group `sum(v)` over `of`, joined back
+    * null-safely: a NULL group is a group (the oracle's GROUP BY keeps it).
+    */
+  private def withGroupTotal(
+      df: DataFrame,
+      of: DataFrame,
+      groupCol: String,
+      v: Column,
+      as: String
+  ): DataFrame = {
+    val totals = of.groupBy(col(groupCol).as("__tg")).agg(sum(v).as(as))
+    df.join(totals, col(groupCol) <=> col("__tg")).drop("__tg")
   }
 
   /** Robust per-row outlier flags via MAD (median absolute deviation) —
@@ -279,9 +264,9 @@ object Stats {
     * group fails loud. Output: every input row with
     * (group, id, v, rank, n, v_norm).
     *
-    * Scale shape: per-group ranks via the two-phase chunked cumsum
-    * ([[graft.ops.Curation.globalRank]]'s geometry with the group in
-    * every partitioning — no single-task group sorts), n_ref rides in as
+    * Scale shape: per-group ranks via the chunked running count
+    * ([[graft.ops.Curation.globalRank]]'s geometry with the group as the
+    * key — no single-task group sorts), n_ref rides in as
     * a broadcast single row, and the final lookup is ONE equi-join on
     * the scaled rank (both sides partition by rank, reference side is
     * the reference group's rows only).
@@ -295,34 +280,20 @@ object Stats {
       chunkSpan: Long = 4096L
   ): DataFrame = {
     require(chunkSpan > 0, "chunkSpan must be positive")
-    val reserved = Seq("__qv", "__qchunk", "__qwithin", "__qtot", "__qcarry",
-      "__qn", "__qg", "__qc2", "__rref", "__vref", "__nref", "__rtarget",
-      "rank", "n", "v_norm")
+    val reserved = Seq("__qv", "__qn", "__tg", "__rref", "__vref", "__nref",
+      "__rtarget", "rank", "n", "v_norm")
     require(!reserved.exists(df.columns.contains),
       s"quantileNormalize reserves the column names ${reserved.mkString(", ")}")
     val dec = "decimal(38,0)"
-    // per-group two-phase rank: chunk by value range, row_number within
-    // (group, chunk), carry = exclusive cumsum of chunk counts per group
+    // per-group rank: the running row count in (value, id) order over
+    // value-range chunks, plus the group's n
     val df1 = df.select(col(groupCol), col(idCol), value.as("__qv"))
-      .withColumn("__qchunk", floor(col("__qv").cast("long") / chunkSpan))
-    val w1 = Window.partitionBy(col(groupCol), col("__qchunk"))
-      .orderBy(col("__qv"), col(idCol))
-    val wc = Window.partitionBy(col(groupCol)).orderBy(col("__qchunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(col(groupCol))
-    // null-safe group join — a NULL group keeps its rows (see madOutliers)
-    val carry = df1.groupBy(col(groupCol), col("__qchunk"))
-      .agg(count(lit(1)).as("__qtot"))
-      .withColumn("__qcarry", coalesce(sum(col("__qtot")).over(wc), lit(0L)))
-      .withColumn("__qn", sum(col("__qtot")).over(wAll))
-      .select(col(groupCol).as("__qg"), col("__qchunk").as("__qc2"),
-        col("__qcarry"), col("__qn"))
-    val ranked = df1
-      .withColumn("__qwithin", row_number().over(w1).cast("long"))
-      .join(carry, col(groupCol) <=> col("__qg") &&
-        col("__qchunk") <=> col("__qc2"))
-      .drop("__qg", "__qc2")
-      .withColumn("rank", col("__qcarry") + col("__qwithin"))
+    val ranked = withGroupTotal(
+      ChunkedScan(df1, Seq(groupCol),
+        floor(col("__qv").cast("long") / chunkSpan),
+        Seq(col("__qv"), col(idCol)), ChunkedScan.UpToCurrent,
+        ChunkedScan.Sum("rank", lit(1L), lit(0L))),
+      df1, groupCol, lit(1L), "__qn")
     val ref = ranked.filter(col(groupCol) === refGroup)
       .select(col("rank").as("__rref"), col("__qv").as("__vref"))
     val nRef = ranked.filter(col(groupCol) === refGroup)
@@ -431,9 +402,9 @@ object Stats {
     * 2× its average rank (the ×2 keeps tied average ranks integral —
     * avg rank of a run of c equal values after p smaller ones is
     * p + (c+1)/2, so r2 = 2p + c + 1). The prefix over distinct values
-    * runs chunked (in-chunk window + chunk-count-sized carry) so a
-    * column with billions of distinct values never single-task sorts —
-    * the [[exactGroupedQuantiles]] / globalRank geometry, unsegmented.
+    * runs as a keyless [[graft.features.ChunkedScan]] so a column with
+    * billions of distinct values never single-task sorts — the
+    * [[exactGroupedQuantiles]] / globalRank geometry, unsegmented.
     */
   private def rank2Map(
       rows: DataFrame,
@@ -443,22 +414,10 @@ object Stats {
     val dec = "decimal(38,0)"
     val h = rows.groupBy(col(vcol))
       .agg(count(lit(1)).cast(dec).as("__c"))
-      .withColumn("__chunk", floor(col(vcol) / chunkSpan))
-    val wIn = Window.partitionBy(col("__chunk")).orderBy(col(vcol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCarry = Window.orderBy(col("__chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // one row per chunk — the only unpartitioned window is metadata-sized
-    val carry = h.groupBy(col("__chunk")).agg(sum(col("__c")).as("__t"))
-      .withColumn("__carry",
-        coalesce(sum(col("__t")).over(wCarry), lit(0L).cast(dec)))
-      .select(col("__chunk"), col("__carry"))
-    h.withColumn("__win",
-        coalesce(sum(col("__c")).over(wIn), lit(0L).cast(dec)))
-      .join(carry, Seq("__chunk"))
+    ChunkedScan(h, Nil, floor(col(vcol) / chunkSpan), Seq(col(vcol)),
+        ChunkedScan.RowsBefore, ChunkedScan.Sum("__p", col("__c"), lit(0L).cast(dec)))
       .select(col(vcol),
-        ((col("__carry") + col("__win")) * 2 + col("__c") + 1)
-          .cast(dec).as("__r2"))
+        (col("__p") * 2 + col("__c") + 1).cast(dec).as("__r2"))
   }
 
   /** Exact Spearman rank correlation between two numeric columns, with

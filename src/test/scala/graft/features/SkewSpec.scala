@@ -1,9 +1,11 @@
 package graft.features
 
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,9 +39,48 @@ class SkewSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val topK = hashedOn(Skew.topKPerKey(turns, Seq("conv_id"),
       Seq($"ts".desc, $"turn_idx".asc), k = 3, salts = 8))
     assert(topK.exists(_("__salt")), topK)
-    val locf = hashedOn(LocfScalable(turns, Seq("conv_id"), "ts", "turn_idx", "tool",
-      chunkSeconds = 300L))
-    assert(locf.exists(_("__chunk")), locf)
+
+    // every ChunkedScan operator: the first exchange under its
+    // within-chunk window hashes the packed (key, chunk) column
+    import graft.ops.{Analytics, Curation, Stats}
+    val id = $"id"
+    val base = spark.range(0L, 4000L).select(
+      when(id % 5 =!= 0L, lit("hot")).otherwise(concat(lit("c"), (id % 7).cast("string"))).as("k"),
+      id, (id * 7919L % 100000L).as("ord"), (id % 13L).as("v"), (id % 50L).as("w"),
+      (id % 3L === 0L).as("flag"), timestamp_seconds(id * 37L % 86400L).as("ts"),
+      when(id % 4L === 0L, lit("t")).as("s"))
+    val byKey = base.repartition(4, $"k")
+    val ops: Seq[(String, DataFrame)] = Seq(
+      "locf" -> ChunkedScan(byKey, Seq("k"), floor($"ord" / 100L), Seq($"ord", id),
+        ChunkedScan.UpToCurrent, ChunkedScan.Last("s_locf", $"s")),
+      "packShards" -> Curation.packShards(byKey, "k", "ord", $"w", 500L, 100L),
+      "packSplit" -> Curation.packSplit(byKey, "k", "ord", $"w", 500L, 100L),
+      "globalRank" -> Curation.globalRank(base.repartition(4, $"ord"), "ord", "id", 3, 100L),
+      "exactGroupedQuantiles" ->
+        Stats.exactGroupedQuantiles(byKey, "k", $"v", "id", Seq(5000), 4L),
+      "weightedGroupedQuantiles" ->
+        Stats.weightedGroupedQuantiles(byKey, "k", $"v", $"w", Seq(5000), 4L),
+      "quantileNormalize" -> Stats.quantileNormalize(byKey, "k", $"v", "id", "hot", 4L),
+      "spearmanExact (rank2Map)" ->
+        Stats.spearmanExact(base.repartition(4, $"v"), $"v", $"w", 4.0),
+      "aucExact" -> Analytics.aucExact(byKey, $"k", $"v".cast("double"), $"flag", 4.0),
+      "targetEncode" -> Encode.targetEncode(byKey, Seq("k"), "ts", $"v", 3600L),
+      "validIntervals" -> Scd2.validIntervals(byKey, "k", "ts", "id", 3600L))
+    def isPacked(es: Seq[Expression]) = es match {
+      case Seq(a: Attribute) => a.name == "__cs_kc"
+      case _ => false
+    }
+    for ((name, df) <- ops) {
+      val chunkWindows = collect(GraftBridge.executedPlan(df)) {
+        case w: WindowExec if isPacked(w.partitionSpec) => w
+      }
+      assert(chunkWindows.nonEmpty, s"$name: no window partitioned on __cs_kc")
+      for (w <- chunkWindows) {
+        val first = collect(w) { case e: ShuffleExchangeExec => e.outputPartitioning }.headOption
+        assert(first.exists { case h: HashPartitioning => isPacked(h.expressions); case _ => false },
+          s"$name: first exchange under the within-chunk window is $first")
+      }
+    }
   }
 
   test("salted two-phase aggregation equals plain groupBy") {

@@ -220,8 +220,8 @@ class CurationSpec extends AnyFunSuite {
       .distinct().count()
     assert(chunksInWeb >= 8, s"web stratum only spans $chunksInWeb chunks")
     // and no single window partition in the plan covers a whole stratum:
-    // every Window operator partitions by (lang, __pchunk) or runs over
-    // the per-chunk totals only
+    // every Window operator partitions by the packed (lang, chunk) column
+    // or runs over the per-chunk totals only
     val plan = Curation.packShards(
       df, "lang", "doc_id", col("tok"), 1000L, chunkSpan = 64L)
       .queryExecution.optimizedPlan
@@ -229,25 +229,25 @@ class CurationSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
     assert(windows.nonEmpty)
-    // phase 1 partitions by (stratum, chunk); the only stratum-alone
-    // window is phase 2's carry, which must run over the per-chunk
-    // TOTALS (an Aggregate grouped on the chunk), never full rows
-    assert(windows.exists(w =>
-      w.partitionSpec.flatMap(_.references.map(_.name)).toSet ==
-        Set("lang", "__pchunk")))
-    windows.foreach { w =>
-      val partNames = w.partitionSpec.flatMap(_.references.map(_.name)).toSet
-      if (partNames == Set("lang")) {
+    // phase 1 partitions by the packed (stratum, chunk) struct itself; the
+    // only stratum-alone window is phase 2's carry (partitioned by the
+    // struct's stratum field), which must run over the per-chunk TOTALS
+    // (an Aggregate grouped on the packed column), never full rows
+    def isPacked(e: org.apache.spark.sql.catalyst.expressions.Expression) = e match {
+      case a: org.apache.spark.sql.catalyst.expressions.Attribute => a.name == "__cs_kc"
+      case _ => false
+    }
+    assert(windows.exists(w => w.partitionSpec.size == 1 && isPacked(w.partitionSpec.head)))
+    windows.filterNot(w => w.partitionSpec.size == 1 && isPacked(w.partitionSpec.head))
+      .foreach { w =>
         val overChunkTotals = w.child.collectFirst {
           case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-              if a.groupingExpressions
-                .flatMap(_.references.map(_.name)).contains("__pchunk") => a
+              if a.groupingExpressions.exists(isPacked) => a
         }.isDefined
         assert(overChunkTotals,
           "a stratum-alone window over full rows would serialize a mega " +
             "stratum")
       }
-    }
   }
 
   test("two-phase packing holds when the order column is a HASH (full " +
